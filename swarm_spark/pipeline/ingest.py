@@ -5,12 +5,18 @@ Dataflow, expressed Spark-first::
     objects ──R1──▶ LoadRequests ──group by Source──▶ spark.read.json
        (driver)        (driver)        (ONE read per rule config,
                                         all matched files at once)
-        ──R2──▶ routed Log frame ──R3──▶ validated
-        ──T1──▶ data struct stripped (per destination batch)
+        ──R2──▶ routed Log frame (lenient R3: violating rows filtered)
         ──T2/T3/T4──▶ envelope (id, ingest_id, timestamp, ingested_at, data)
-        ──G1──▶ loop over distinct (dataset, table, partition)
+                      + strict R3 violation flag
+        ──persist──▶ destination plan: ONE grouped aggregate by
+                     (dataset, table, partition) → per destination the
+                     row count, every data leaf's non-void count, and
+                     the R3 violations (strict: any → raise, no write)
+        ──G1──▶ loop over the planned destinations
+        ──T1──▶ data struct rebuilt from the plan's kept leaves (no job)
         ──Q1/Q2/Q4──▶ sink.ensure_table (strict merge / evolve)
-        ──W1──▶ sink.append (aligned to evolved schema)
+        ──W1──▶ sink.append (aligned to evolved schema; one write job,
+                             row count observed on it)
         ──W6──▶ load-log metadata row
 
 Scale notes (100 TB):
@@ -19,9 +25,13 @@ Scale notes (100 TB):
 - One ``spark.read.json`` per distinct Source config, not per object:
   a million matched files become one distributed scan with full-scan
   inference, not a million jobs.
-- The transformed frame is persisted before the per-destination loop so
-  N destinations cost one source scan + N cheap filtered writes; the
-  routing columns are low-cardinality by construction (table names).
+- The transformed frame is persisted, and a load of N destinations
+  costs one scan + one plan aggregate + N writes. The plan does every
+  per-destination check at once (strict validation, destination
+  discovery, void-field stripping) and each write counts its own rows,
+  so the number of jobs no longer grows with checks × destinations. Its output is one small
+  row per destination: the routing columns are low-cardinality by
+  construction (table names).
 - Per-record work (explode fan-out, struct rebuild, md5 id) is all
   Catalyst expressions — whole-stage codegen, no Python in the row
   path (the canonical-id pandas UDF is opt-in).
@@ -40,12 +50,20 @@ from ..functions.ids import canonical_id_column, fast_id_column
 from ..functions.timeutils import timestamp_from_unix
 from ..model import LoadRequest, ModelError, ObjectMeta, Source, TableDest
 from ..rules.event import EventRuleSet
-from ..rules.schema_rule import SchemaRuleRegistry, validate_output
-from ..schema.strip import strip_struct_column
+from ..rules.schema_rule import (
+    SchemaRuleRegistry,
+    invalid_output_error,
+    output_violation,
+    validate_output,
+)
+from ..schema.strip import kept_leaves, leaf_counts, strip_struct_column
 from ..sinks.base import Sink
 from ..sources.jsonsrc import read_objects
 
 META_DEST = TableDest("swarm", "load_log")
+# Strict mode: per-row R3 violation flag the envelope carries into the
+# destination plan (the raw timestamp it tests is gone after enveloping)
+VIOLATION_COL = "_violation"
 
 
 class IngestPartialFailure(RuntimeError):
@@ -76,6 +94,47 @@ class IngestStats:
     @property
     def total_rows(self) -> int:
         return sum(self.rows_by_dest.values())
+
+
+@dataclass(frozen=True)
+class DestPlan:
+    """One destination of a load, as the plan aggregate found it."""
+
+    dest: TableDest
+    rows: int
+    keep: frozenset[str]  # data leaves (``data.a.b``) set in some row
+
+
+def plan_destinations(enveloped: DataFrame) -> list[DestPlan]:
+    """The destination plan: one grouped aggregate over the enveloped
+    frame, keyed by ``(dataset, table, partition)``, that returns per
+    destination its row count, the non-void count of every ``data``
+    leaf (:func:`~swarm_spark.schema.strip.leaf_counts`) and, when the
+    frame carries :data:`VIOLATION_COL`, its R3 violations. The sinks
+    report the rows they wrote from their own write jobs; ``rows`` is
+    what the plan saw routed to each destination.
+
+    Raises :class:`~swarm_spark.rules.schema_rule.RuleOutputError` when
+    any row violates R3, before the caller writes anything; the sample
+    query runs only then. Destinations come back sorted."""
+    keys = ["dataset", "table", "partition"]
+    counts = leaf_counts(enveloped.schema["data"].dataType, prefix="data.")
+    aggs = [F.count(F.lit(1)).alias("rows"), *[c for _, c in counts]]
+    checked = VIOLATION_COL in enveloped.columns
+    if checked:
+        aggs.append(F.count(F.when(F.col(VIOLATION_COL), 1)).alias("violations"))
+    found = enveloped.groupBy(*keys).agg(*aggs).collect()
+    if checked and sum(r["violations"] for r in found):
+        raise invalid_output_error(enveloped.where(F.col(VIOLATION_COL)).drop(VIOLATION_COL))
+    plans = [
+        DestPlan(
+            TableDest(r["dataset"], r["table"], r["partition"]),
+            r["rows"],
+            frozenset(kept_leaves(counts, r)),
+        )
+        for r in found
+    ]
+    return sorted(plans, key=lambda p: (p.dest.dataset, p.dest.table, p.dest.partition))
 
 
 class IngestPipeline:
@@ -130,9 +189,13 @@ class IngestPipeline:
             # empty-schema relation (bare names would resolve to
             # zero-arg SQL functions like current_user there)
             return None
-        rule = self.schema_rules.get(source.schema)
-        out = rule.apply(raw)
-        return validate_output(out, strict=self.strict)
+        return self._checked(self.schema_rules.get(source.schema).apply(raw))
+
+    def _checked(self, logs: DataFrame) -> DataFrame:
+        """R3 on a rule's output. Lenient mode drops violating rows here
+        (no job); strict mode leaves them for the destination plan,
+        which counts them with the writes' other checks."""
+        return logs if self.strict else validate_output(logs, strict=False)
 
     def _envelope(self, logs: DataFrame, ingest_id: str) -> DataFrame:
         data_type = logs.schema["data"].dataType
@@ -141,6 +204,7 @@ class IngestPipeline:
             if self.id_mode == "fast"
             else canonical_id_column("data", data_type)
         )
+        flag = [output_violation().alias(VIOLATION_COL)] if self.strict else []
         return logs.select(
             F.col("dataset"),
             F.col("table"),
@@ -150,13 +214,13 @@ class IngestPipeline:
             timestamp_from_unix(F.col("timestamp")).alias("timestamp"),
             F.current_timestamp().alias("ingested_at"),
             F.col("data"),
+            *flag,
         )
 
-    def transform_objects(self, objs: list[ObjectMeta]) -> DataFrame | None:
-        """Route + transform + envelope WITHOUT writing: the routed Log
-        frame as a DataFrame (one union across source groups). Useful
-        for dry inspection and correctness harnesses; ``load_objects``
-        is this plus the per-destination evolve/append."""
+    def envelope_objects(self, objs: list[ObjectMeta]) -> DataFrame | None:
+        """Route + transform + envelope, unvalidated and unwritten: one
+        union across source groups. In strict mode the frame carries
+        :data:`VIOLATION_COL` for :func:`plan_destinations` to check."""
         reqs = self.route(objs)
         by_source: dict[Source, list[str]] = {}
         for r in reqs:
@@ -172,6 +236,20 @@ class IngestPipeline:
         for f in frames[1:]:
             out = out.unionByName(f)
         return out
+
+    def transform_objects(self, objs: list[ObjectMeta]) -> DataFrame | None:
+        """Route + transform + envelope WITHOUT writing: the routed,
+        validated Log frame as a DataFrame (one union across source
+        groups). Useful for dry inspection and correctness harnesses;
+        ``load_objects`` is this plus the per-destination evolve/append.
+        Strict mode probes the union once for a violating row."""
+        out = self.envelope_objects(objs)
+        if out is None or not self.strict:
+            return out
+        violating = out.where(F.col(VIOLATION_COL)).drop(VIOLATION_COL)
+        if violating.limit(1).count():
+            raise invalid_output_error(violating)
+        return out.drop(VIOLATION_COL)
 
     def load_objects(self, objs: list[ObjectMeta]) -> IngestStats:
         stats = IngestStats(ingest_id=uuid.uuid4().hex, started_at=time.time())
@@ -218,19 +296,25 @@ class IngestPipeline:
         for Structured Streaming (each microbatch frame lands here)."""
         stats = IngestStats(ingest_id=uuid.uuid4().hex, started_at=time.time())
         if raw.schema.fields:
-            rule = self.schema_rules.get(schema_name)
-            logs = validate_output(rule.apply(raw), strict=self.strict)
+            logs = self._checked(self.schema_rules.get(schema_name).apply(raw))
             self._write_routed(self._envelope(logs, stats.ingest_id), stats)
         stats.finished_at = time.time()
         if self.write_load_log:
             self._append_load_log(stats)
         return stats
 
-    # -- G1 + Q1/Q2/Q4 + W1: per-destination evolve + append -----------
+    # -- plan + G1 + Q1/Q2/Q4 + W1: per-destination evolve + append ----
     def _write_routed(
         self, enveloped: DataFrame, stats: IngestStats, txn=None
     ) -> dict[tuple, int]:
         """Per-destination evolve+append.
+
+        The persisted frame first goes through :func:`plan_destinations`,
+        the one job that finds the destinations and their void ``data``
+        leaves and, in strict mode, raises ``RuleOutputError`` before any
+        write when a row breaks R3. Each destination's ``data`` struct
+        is then rebuilt from the plan's kept leaves without a job, and
+        its append is its one write job.
 
         Default mode: PARTIAL-failure tolerance — one bad destination
         (schema conflict, sink failure) never blocks the others; its
@@ -261,13 +345,8 @@ class IngestPipeline:
             txn = self.sink.transaction()
         staged: dict[tuple, int] = {}
         try:
-            dests = [
-                TableDest(r["dataset"], r["table"], r["partition"])
-                for r in enveloped.select("dataset", "table", "partition")
-                .distinct()
-                .collect()
-            ]
-            for dest in sorted(dests, key=lambda d: (d.dataset, d.table, d.partition)):
+            for plan in plan_destinations(enveloped):
+                dest = plan.dest
                 batch = enveloped.where(
                     (F.col("dataset") == dest.dataset)
                     & (F.col("table") == dest.table)
@@ -275,7 +354,7 @@ class IngestPipeline:
                 ).select("id", "ingest_id", "timestamp", "ingested_at", "data")
                 try:
                     # T1: per-destination-batch void pruning before inference
-                    batch = strip_struct_column(batch, "data")
+                    batch = strip_struct_column(batch, "data", keep=plan.keep)
                     merged = self.sink.ensure_table(dest, batch.schema["data"].dataType)
                     aligned = self._align_data(batch, merged)
                     if txn is not None:

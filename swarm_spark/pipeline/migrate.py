@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..model import ModelError, ObjectMeta, TableDest
-from ..pipeline.ingest import IngestPipeline
+from ..pipeline.ingest import IngestPipeline, plan_destinations
 from ..schema.strip import strip_struct_column
 from ..sinks.table import TableSink
 
@@ -58,24 +58,18 @@ def migrate(
 
 def apply_schema(pipeline: IngestPipeline, objs: list[ObjectMeta]) -> list[TableDest]:
     """Evolve destination schemas from the objects' inferred shapes
-    without writing any rows. Returns the destinations touched."""
-    enveloped = pipeline.transform_objects(objs)
+    without writing any rows. Returns the destinations touched.
+
+    One job: the ingest destination plan finds every destination and its
+    void ``data`` leaves (and, in strict mode, rejects invalid rule
+    output); each destination's stripped schema is then derived from
+    the plan without touching the data again."""
+    enveloped = pipeline.envelope_objects(objs)
     if enveloped is None:
         return []
-    from pyspark.sql import functions as F
-
     touched = []
-    dests = [
-        TableDest(r["dataset"], r["table"], r["partition"])
-        for r in enveloped.select("dataset", "table", "partition").distinct().collect()
-    ]
-    for dest in sorted(dests, key=lambda d: (d.dataset, d.table, d.partition)):
-        batch = enveloped.where(
-            (F.col("dataset") == dest.dataset)
-            & (F.col("table") == dest.table)
-            & (F.col("partition") == dest.partition)
-        ).select("data")
-        batch = strip_struct_column(batch, "data")
-        pipeline.sink.ensure_table(dest, batch.schema["data"].dataType)
-        touched.append(dest)
+    for plan in plan_destinations(enveloped):
+        data = strip_struct_column(enveloped.select("data"), "data", keep=plan.keep)
+        pipeline.sink.ensure_table(plan.dest, data.schema["data"].dataType)
+        touched.append(plan.dest)
     return touched

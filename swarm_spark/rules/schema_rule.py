@@ -17,9 +17,9 @@ codegen'd. The output contract is RULE_OUTPUT_COLUMNS:
 - table: string (non-null)             - timestamp: double unix-sec > 0
 - partition: '', hour|day|month|year   - data: struct (non-null)
 
-:func:`rule_output` builds a conforming frame; :func:`validate_output`
-enforces R3 (pkg/domain/model/policy.go:73-89) as one distributed
-aggregation, raising on the first violating batch in strict mode.
+:func:`rule_output` builds a conforming frame; :func:`output_violation`
+is the R3 predicate (pkg/domain/model/policy.go:73-89) that
+:func:`validate_output` and the ingest destination plan share.
 """
 
 from __future__ import annotations
@@ -112,13 +112,13 @@ class SchemaRuleRegistry:
         return sorted(self._rules)
 
 
-def validate_output(df: DataFrame, strict: bool = True) -> DataFrame:
-    """R3 validation: dataset/table non-empty, timestamp > 0, data set.
-
-    One aggregation counts violations; strict mode raises, lenient mode
-    filters them out (and the caller reports the drop count).
-    """
-    bad = (
+def output_violation() -> Column:
+    """The R3 predicate (pkg/domain/model/policy.go:73-89): true on a
+    rule-output row with an empty dataset or table, a timestamp that is
+    not > 0, or no data. :func:`validate_output` and the ingest
+    destination plan (``pipeline/ingest.py``) both evaluate this one
+    expression."""
+    return (
         F.col("dataset").isNull()
         | (F.col("dataset") == "")
         | F.col("table").isNull()
@@ -127,13 +127,31 @@ def validate_output(df: DataFrame, strict: bool = True) -> DataFrame:
         | (F.col("timestamp") <= 0)
         | F.col("data").isNull()
     )
-    if strict:
-        n = df.where(bad).limit(1).count()
-        if n:
-            sample = df.where(bad).limit(3).collect()
-            raise RuleOutputError(f"invalid rule output rows, e.g. {sample}")
-        return df
-    return df.where(~bad)
+
+
+def invalid_output_error(violating: DataFrame) -> RuleOutputError:
+    """The strict-mode error, naming up to three violating rows. The
+    sample query is the only job it runs, and only on this failure
+    path."""
+    return RuleOutputError(f"invalid rule output rows, e.g. {violating.limit(3).collect()}")
+
+
+def validate_output(df: DataFrame, strict: bool = True) -> DataFrame:
+    """R3 validation: dataset/table non-empty, timestamp > 0, data set.
+
+    Strict mode probes for a violating row (one short job) and raises
+    :class:`RuleOutputError`; lenient mode filters violating rows out
+    lazily, with no job. The ingest pipeline calls this only in lenient
+    mode: in strict mode it counts :func:`output_violation` inside its
+    one destination-plan aggregate instead, and raises the same error
+    before any write.
+    """
+    bad = output_violation()
+    if not strict:
+        return df.where(~bad)
+    if df.where(bad).limit(1).count():
+        raise invalid_output_error(df.where(bad))
+    return df
 
 
 # ---- reshaping helpers (json.patch analogues, docs/rule.md:126-183) ----

@@ -71,6 +71,26 @@ def _leaf_columns(schema: T.StructType, prefix: str = "") -> list[tuple[str, T.D
     return out
 
 
+def leaf_counts(schema: T.StructType, prefix: str = "") -> list[tuple[str, Column]]:
+    """Every non-struct leaf under ``schema`` as ``(path, aggregate)``,
+    where the aggregate (aliased ``c0``, ``c1``, ... in order) counts
+    the rows in which that leaf is not void. The one leaf-count
+    definition: the strip functions below and the ingest destination
+    plan (``pipeline/ingest.py``, grouped by destination) all evaluate
+    these aggregates."""
+    leaves = [(p, d) for p, d in _leaf_columns(schema, prefix) if not isinstance(d, T.StructType)]
+    return [(p, _nonvoid_count(F.col(p), d).alias(f"c{i}")) for i, (p, d) in enumerate(leaves)]
+
+
+def kept_leaves(counts: list[tuple[str, Column]], row) -> set[str]:
+    """The leaf paths whose count in the aggregate ``row`` is above zero."""
+    return {p for i, (p, _) in enumerate(counts) if row[f"c{i}"] > 0}
+
+
+def _count_kept(df: DataFrame, counts: list[tuple[str, Column]]) -> set[str]:
+    return kept_leaves(counts, df.agg(*[c for _, c in counts]).collect()[0])
+
+
 def _rebuild(schema: T.StructType, prefix: str, keep: set[str]) -> list[Column] | None:
     cols: list[Column] = []
     for f in schema.fields:
@@ -94,37 +114,35 @@ def strip_void_columns(df: DataFrame) -> DataFrame:
     This is the DataFrame analogue of per-record ``cloneWithoutNil``
     feeding schema inference.
     """
-    leaves = [(p, d) for p, d in _leaf_columns(df.schema) if not isinstance(d, T.StructType)]
-    if not leaves:
+    counts = leaf_counts(df.schema)
+    if not counts:
         return df
-    agg = df.agg(
-        *[_nonvoid_count(F.col(p), d).alias(f"c{i}") for i, (p, d) in enumerate(leaves)]
-    ).collect()[0]
-    keep = {p for i, (p, _) in enumerate(leaves) if agg[f"c{i}"] > 0}
-    cols = _rebuild(df.schema, "", keep)
+    cols = _rebuild(df.schema, "", _count_kept(df, counts))
     if cols is None:
         raise ValueError("all columns are void after stripping")
     return df.select(*cols)
 
 
-def strip_struct_column(df: DataFrame, col: str = "data") -> DataFrame:
+def strip_struct_column(
+    df: DataFrame, col: str = "data", keep: set[str] | None = None
+) -> DataFrame:
     """Rebuild one struct column without its void nested fields, leaving
     every other column untouched (used on the rule-output ``data``
-    struct before inference/evolution)."""
+    struct before inference/evolution).
+
+    ``keep`` is the set of leaf paths (``data.a.b``) that carry a value,
+    as :func:`leaf_counts` aggregates find them. Without it, one
+    aggregate job over ``df`` computes the set. The ingest pipeline and
+    ``swarm schema`` pass the set their destination plan already holds,
+    so there the rebuild is a projection and runs no job."""
     dtype = df.schema[col].dataType
     if not isinstance(dtype, T.StructType):
         raise TypeError(f"{col} is not a struct")
-    leaves = [
-        (p, d)
-        for p, d in _leaf_columns(dtype, prefix=col + ".")
-        if not isinstance(d, T.StructType)
-    ]
-    if not leaves:
+    counts = leaf_counts(dtype, prefix=col + ".")
+    if not counts:
         return df
-    agg = df.agg(
-        *[_nonvoid_count(F.col(p), d).alias(f"c{i}") for i, (p, d) in enumerate(leaves)]
-    ).collect()[0]
-    keep = {p for i, (p, _) in enumerate(leaves) if agg[f"c{i}"] > 0}
+    if keep is None:
+        keep = _count_kept(df, counts)
     inner = _rebuild(dtype, col + ".", keep)
     if inner is None:
         raise ValueError(f"struct column {col!r} is entirely void")

@@ -11,7 +11,10 @@ connector sink with the identical contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import TableDest
@@ -29,3 +32,12 @@ class Sink:
         ingested_at, data) already aligned to the evolved schema.
         Returns the row count written."""
         raise NotImplementedError
+
+
+def write_counted(df: DataFrame, write: Callable[[DataFrame], None]) -> int:
+    """Run ``write`` on ``df`` and return the rows it wrote, counted by an
+    :class:`Observation` on the write job itself rather than by a
+    ``count()`` job before it."""
+    obs = Observation()
+    write(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    return int(obs.get["rows"])

@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 
 from ..model import TableDest
 from ..schema.merge import merge_schemas
-from .base import Sink
+from .base import Sink, write_counted
 from .table import envelope_schema
 
 
@@ -43,9 +43,8 @@ class DumpSink(Sink):
         return data_schema
 
     def append(self, dest: TableDest, df: DataFrame) -> int:
-        n = df.count()
-        df.write.mode("append").json(self._base(dest) + ".log")
-        return n
+        out = self._base(dest) + ".log"
+        return write_counted(df, lambda w: w.write.mode("append").json(out))
 
     def read_table(self, dest: TableDest) -> DataFrame:
         with open(self._base(dest) + ".schema.json", encoding="utf-8") as f:

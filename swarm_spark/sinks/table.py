@@ -23,7 +23,9 @@ reference's partial-success tolerance, pkg/usecase/load.go:100-130):
 slices stage under hidden ``_staged-{txn}`` subdirs, one manifest-file
 rename publishes the whole transaction, and file promotion into the
 table layout is idempotent + completed by readers, so a crash at any
-point leaves either nothing or the full batch visible.
+point leaves either nothing or the full batch visible. Every append
+stages the same way, in a hidden dir of its own, so concurrent appends
+to one table never share a Spark committer dir.
 
 On a cluster this sink maps 1:1 onto Delta/Iceberg (transactional
 commit replaces the lock file / manifest) or the BigQuery connector.
@@ -45,7 +47,7 @@ from pyspark.sql import types as T
 from ..functions.timeutils import PARTITION_COL, partition_value
 from ..model import ENVELOPE_FIELDS, ModelError, TableDest, TimeUnit
 from ..schema.merge import merge_schemas, schemas_equal
-from .base import Sink
+from .base import Sink, write_counted
 
 SCHEMA_FILE = "_swarm_schema.json"
 LOCK_FILE = "_swarm_schema.lock"
@@ -735,19 +737,33 @@ class TableSink(Sink):
 def _write_slice(d: str, dest: TableDest, df: DataFrame) -> int:
     """Append one destination slice under ``d`` (direct table dir or a
     transaction's staged dir), honoring the time-unit partitioning —
-    the single write path shared by append() and TableTransaction."""
-    n = df.count()
-    if n == 0:
-        return 0
-    writer = df
-    if dest.partition != TimeUnit.NONE.value:
-        writer = df.withColumn(
-            PARTITION_COL, partition_value(F.col("timestamp"), dest.partition)
-        )
-        writer.write.mode("append").partitionBy(PARTITION_COL).parquet(d)
-    else:
-        writer.write.mode("append").parquet(d)
-    return n
+    the single write path shared by append() and TableTransaction.
+
+    Spark writes the slice into its own hidden ``_staged-append-*``
+    dir under ``d``, and :func:`_promote` moves the files in. Writing
+    into ``d`` directly would share ``d/_temporary`` with every other
+    writer of ``d``: concurrent appends to one table then lose or
+    duplicate each other's files when the first job to commit deletes
+    the common ``_temporary`` dir. The row count comes from the write
+    job; a slice of zero rows (or a failed write) leaves ``d`` as it
+    was."""
+    slice_id = f"append-{uuid.uuid4().hex}"
+    staged = os.path.join(d, f"{STAGED_PREFIX}{slice_id}")
+    partitioned = dest.partition != TimeUnit.NONE.value
+    if partitioned:
+        df = df.withColumn(PARTITION_COL, partition_value(F.col("timestamp"), dest.partition))
+
+    def write(w: DataFrame) -> None:
+        writer = w.write.mode("overwrite")
+        (writer.partitionBy(PARTITION_COL) if partitioned else writer).parquet(staged)
+
+    try:
+        n = write_counted(df, write)
+        if n:
+            _promote(d, slice_id)
+        return n
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
 
 
 def _retire(table_dir: str, rel: str) -> None:

@@ -360,3 +360,199 @@ class TestDumpSink:
             "data",
         ]
         assert sink.read_table(TableDest("my_dataset", "cloudtrail")).count() == 4
+
+
+def _bykind_rules():
+    """Three day-partitioned destinations, chosen per record."""
+    rules = SchemaRuleRegistry()
+
+    @rules.rule("bykind3")
+    def bykind3(df):
+        return rule_output(
+            df,
+            dataset="logs",
+            table=F.concat(F.lit("t_"), F.col("kind")),
+            partition="day",
+            timestamp=F.col("ts").cast("double"),
+            data=F.struct("kind", "v", "extra", "meta", "tags"),
+        )
+
+    events = EventRuleSet([EventRule("all", name_suffix(".ndjson"), (Source(schema="bykind3"),))])
+    return events, rules
+
+
+def _bykind_object(tmp_path, recs: list[dict]) -> ObjectMeta:
+    p = tmp_path / "mix.ndjson"
+    p.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    return ObjectMeta(bucket="b", name="mix.ndjson", path=str(p))
+
+
+# ``extra`` is set only in t_a and ``meta.x`` only in t_b; ``meta.y`` is
+# void everywhere, and t_c sets nothing but ``kind`` and ``v``.
+BYKIND_RECS = [
+    {"kind": "a", "v": 1, "ts": 1700000000, "extra": "e1", "meta": {"x": None, "y": None}, "tags": []},
+    {"kind": "a", "v": 2, "ts": 1700090000, "extra": None, "meta": None, "tags": ["t"]},
+    {"kind": "b", "v": 3, "ts": 1700000001, "extra": None, "meta": {"x": 7, "y": None}, "tags": None},
+    {"kind": "b", "v": 4, "ts": 1700000002, "extra": None, "meta": {"x": None, "y": None}, "tags": ["u", "w"]},
+    {"kind": "c", "v": 5, "ts": 1700000003, "extra": None, "meta": {"x": None, "y": None}, "tags": []},
+]
+BYKIND_DESTS = [TableDest("logs", f"t_{k}", "day") for k in "abc"]
+
+
+def _landed(sink, dest):
+    df = sink.read_table(dest)
+    rows = sorted(
+        (r["id"], r["timestamp"], json.dumps(r["data"].asDict(recursive=True), sort_keys=True))
+        for r in df.collect()
+    )
+    return df.schema.json(), rows
+
+
+class TestDestinationPlan:
+    """The destination plan: one aggregate replaces the per-destination
+    validation, discovery, strip and count jobs of a load."""
+
+    def test_load_runs_scan_plan_and_one_write_per_destination(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from swarm_spark.pipeline import ingest
+
+        sc = spark.sparkContext
+        events, rules = _bykind_rules()
+        sink = TableSink(spark, str(tmp_path / "wh"))
+        pipe = IngestPipeline(spark, events, rules, sink)
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        pipe.load_objects([obj])  # warm: every table exists, no first-load work left
+
+        groups: list[tuple[str, str]] = []
+        base = f"load-{id(self)}"
+
+        def tagged(fn, phase):
+            def wrapper(*a, **k):
+                g = f"{base}-{phase}-{len(groups)}"
+                groups.append((phase, g))
+                sc.setJobGroup(g, phase)
+                try:
+                    return fn(*a, **k)
+                finally:
+                    sc.setJobGroup(base, "load")
+
+            return wrapper
+
+        monkeypatch.setattr(ingest, "read_objects", tagged(ingest.read_objects, "scan"))
+        monkeypatch.setattr(
+            ingest, "plan_destinations", tagged(ingest.plan_destinations, "plan")
+        )
+        monkeypatch.setattr(TableSink, "append", tagged(TableSink.append, "write"))
+        sc.setJobGroup(base, "load")
+        try:
+            stats = pipe.load_objects([obj])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        by_phase: dict[str, list[int]] = {}
+        for phase, g in groups:
+            by_phase.setdefault(phase, []).append(len(tracker.getJobIdsForGroup(g)))
+
+        assert stats.rows_by_dest == {("logs", "t_a", "day"): 2, ("logs", "t_b", "day"): 2,
+                                      ("logs", "t_c", "day"): 1}
+        assert len(by_phase["scan"]) == 1
+        # one aggregate. It is the first action on the persisted frame,
+        # so it also builds the cache (the read proper), and adaptive
+        # execution runs the cache build and the shuffle map stage as
+        # jobs of their own
+        assert len(by_phase["plan"]) == 1 and 1 <= by_phase["plan"][0] <= 3
+        assert by_phase["write"] == [1, 1, 1]
+        # nothing else: no validation probe, distinct, strip or count job
+        assert len(tracker.getJobIdsForGroup(base)) == 0
+
+    def test_strict_violation_raises_before_any_write(self, spark, tmp_path):
+        import os
+
+        from swarm_spark.rules import RuleOutputError
+
+        events, rules = _bykind_rules()
+        wh = tmp_path / "wh"
+        sink = TableSink(spark, str(wh))
+        pipe = IngestPipeline(spark, events, rules, sink)
+        bad = [dict(r) for r in BYKIND_RECS]
+        bad[3]["ts"] = 0  # timestamp must be > 0 (R3)
+        obj = _bykind_object(tmp_path, bad)
+        with pytest.raises(RuleOutputError, match="invalid rule output rows"):
+            pipe.load_objects([obj])
+        assert sink.list_tables() == []
+        landed = [f for _r, _d, fs in os.walk(wh) for f in fs if f.endswith(".parquet")]
+        assert landed == []
+        # lenient mode drops the violating row and loads the rest
+        stats = IngestPipeline(spark, events, rules, sink, strict=False).load_objects([obj])
+        assert stats.rows_by_dest == {("logs", "t_a", "day"): 2, ("logs", "t_b", "day"): 1,
+                                      ("logs", "t_c", "day"): 1}
+
+    def test_strip_is_per_destination_and_matches_per_batch_strip(self, spark, tmp_path):
+        """A field void in one destination but set in another is kept
+        only where it is set. The landed tables equal those of the
+        per-destination loop the plan replaced: filter, strip with its
+        own aggregate, evolve, append."""
+        from swarm_spark.pipeline.ingest import plan_destinations
+        from swarm_spark.schema import strip_struct_column
+
+        events, rules = _bykind_rules()
+        sink = TableSink(spark, str(tmp_path / "wh"))
+        pipe = IngestPipeline(spark, events, rules, sink)
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        stats = pipe.load_objects([obj])
+        assert stats.total_rows == 5
+
+        ref = TableSink(spark, str(tmp_path / "ref"))
+        enveloped = pipe.transform_objects([obj]).persist()
+        plans = plan_destinations(enveloped)
+        assert [(p.dest, p.rows) for p in plans] == list(zip(BYKIND_DESTS, [2, 2, 1]))
+        for dest in BYKIND_DESTS:
+            batch = enveloped.where(F.col("table") == dest.table).select(
+                "id", "ingest_id", "timestamp", "ingested_at", "data"
+            )
+            batch = strip_struct_column(batch, "data")
+            merged = ref.ensure_table(dest, batch.schema["data"].dataType)
+            ref.append(dest, pipe._align_data(batch, merged))
+        enveloped.unpersist()
+
+        def fields(dest):
+            data = sink.read_table(dest).schema["data"].dataType
+            return {
+                f.name: sorted(g.name for g in f.dataType.fields)
+                if isinstance(f.dataType, T.StructType)
+                else None
+                for f in data.fields
+            }
+
+        assert fields(BYKIND_DESTS[0]) == {"extra": None, "kind": None, "tags": None, "v": None}
+        assert fields(BYKIND_DESTS[1]) == {"kind": None, "meta": ["x"], "tags": None, "v": None}
+        assert fields(BYKIND_DESTS[2]) == {"kind": None, "v": None}
+        for dest in BYKIND_DESTS:
+            assert _landed(sink, dest) == _landed(ref, dest)
+
+    def test_apply_schema_matches_load(self, spark, tmp_path):
+        from swarm_spark.pipeline import apply_schema
+
+        events, rules = _bykind_rules()
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        loaded = TableSink(spark, str(tmp_path / "loaded"))
+        IngestPipeline(spark, events, rules, loaded).load_objects([obj])
+        planned = TableSink(spark, str(tmp_path / "planned"))
+        touched = apply_schema(IngestPipeline(spark, events, rules, planned), [obj])
+        assert touched == BYKIND_DESTS
+        for dest in BYKIND_DESTS:
+            assert planned._read_schema(dest) == loaded._read_schema(dest)
+            assert planned.read_table(dest).count() == 0
+
+    def test_zero_row_append_leaves_table_unchanged(self, spark, tmp_path):
+        events, rules = _bykind_rules()
+        sink = TableSink(spark, str(tmp_path / "wh"))
+        pipe = IngestPipeline(spark, events, rules, sink)
+        pipe.load_objects([_bykind_object(tmp_path, BYKIND_RECS)])
+        dest = BYKIND_DESTS[0]
+        files, before = sink._data_files(dest), _landed(sink, dest)
+        empty = sink.read_table(dest).where(F.lit(False))
+        assert sink.append(dest, empty) == 0
+        assert sink._data_files(dest) == files
+        assert _landed(sink, dest) == before

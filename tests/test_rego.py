@@ -247,11 +247,12 @@ class TestRegoAuth:
         from swarm_spark.rules import load_rego_auth_dir, load_rego_dir
 
         (tmp_path / "event.rego").write_text(EVENT_REGO)
-        with open(REF_AUTH_REGO, encoding="utf-8") as f:
-            (tmp_path / "auth.rego").write_text(f.read())
+        (tmp_path / "auth.rego").write_text(DOCS_AUTH_REGO)
         events, _schemas = load_rego_dir(str(tmp_path))
         pol = load_rego_auth_dir(str(tmp_path))
         assert events.rules and pol is not None
+        assert pol.deny(self._input(path="/event/xxx")) is False
+        assert pol.deny(self._input(path="/other")) is True
 
     def test_conflicting_complete_rules_raise(self):
         """OPA eval_conflict_error parity: two satisfied complete rules
