@@ -47,19 +47,23 @@ Scale shape (the 100-TB story):
   index gate) — no all-pairs stage; the final (query, doc) aggregation
   and salted two-phase top-k bound every window task at ~k rows.
 
-Session-cache contract (r14 VERDICT #6): the pruned rankers persist()
-their metadata-sized query-side gate frames (qterms/qidf/ub/seed and
-the lm equivalents) so the ~5 serial gate actions share one
-materialization; the frames are ≤ |Q|·terms rows by contract but are
-NOT unpersisted on exit (a lazy frame is returned; the terminal action
-happens at the caller). Batch jobs and the bench clear the session
-cache between queries; a long-lived serving session should
+Session-cache contract (r14 VERDICT #6): both pruned rankers run one
+MaxScore gate ladder (``_maxscore_topk``), which persist()s the frames
+its ~5 serial gate actions share so each materializes once: the ad-hoc
+entry's batch-restricted postings, and the query-side ``qterms``,
+``qw`` (per-term weights), ``qub`` (per-term upper bounds),
+``seed_term``, ``seed_pairs`` and ``ess`` (essential terms); θ is a
+driver-local frame, not a cache entry. The query-side frames are
+≤ |Q|·terms rows (``seed_pairs`` is bounded by the seed df cap) but
+are NOT unpersisted on exit (a lazy frame is returned; the terminal
+action happens at the caller). Batch jobs and the bench clear the
+session cache between queries; a long-lived serving session should
 `spark.catalog.clearCache()` between query batches.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sampling import hash_bucket
@@ -176,6 +180,72 @@ def load_bm25(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     )
 
 
+def _query_tokens(queries: DataFrame, query_id_col: str, query_text_col: str):
+    """(query_id, tok): one row per query token occurrence."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.explode(tokens_col(query_text_col)).alias("tok"),
+    )
+
+
+def _probe_index(
+    docs, queries, postings, totals, text_col, id_col, query_text_col,
+    broadcast_max_queries, pre_qn=None, persist=False,
+):
+    """(postings, totals, small) for a lexical probe — the two entry
+    shapes every ranker here shares. Ad-hoc (``postings=None``):
+    postings from ``docs``, restricted to the batch vocabulary BEFORE
+    the aggregation when the batch passes the broadcast guard (the
+    ranking path only ever reads batch-term rows, and tf/df/cf/dl are
+    per-token values, so results are bit-identical while the postings
+    shuffle shrinks from corpus volume to the batch's relevant
+    postings); totals from the raw docs (N and the token total are
+    corpus facts, not batch facts). Persisted index: the given
+    postings; without ``totals`` they are derived from the postings'
+    distinct (id, dl) pairs — exact unless the corpus holds zero-token
+    docs, which shift N/avgdl only.
+
+    ``pre_qn`` is a ``limit(cap+1).count()`` the caller already ran
+    past the broadcast cap: it settles the guard without a second
+    action. ``persist`` caches the ad-hoc postings for callers that run
+    several actions over them."""
+    from .similarity import _probe_is_small
+
+    if postings is None and docs is None:
+        raise ValueError("need docs or a persisted postings frame")
+    small = (
+        broadcast_max_queries is not None and pre_qn <= broadcast_max_queries
+        if pre_qn is not None
+        else _probe_is_small(queries, broadcast_max_queries)
+    )
+    if postings is not None:
+        if totals is None:
+            totals = postings.select("id", "dl").distinct().agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("tot_tokens"),
+            )
+        return postings, totals, small
+    qvocab = queries.select(
+        F.explode(tokens_col(query_text_col)).alias("tok")
+    ).distinct()
+    post = bm25_postings(docs, text_col, id_col, vocab=qvocab if small else None)
+    if persist:
+        post = post.persist()
+    if totals is None:
+        totals = bm25_totals(docs, text_col, id_col)
+    return post, totals, small
+
+
+def _sum_totals(totals: DataFrame) -> tuple[int, int]:
+    """(n_docs, tot_tokens) folded over a totals frame's rows (one per
+    appended wave — the additive-statistic contract): ONE driver row."""
+    tot = totals.agg(
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
+        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt"),
+    ).head()
+    return int(tot["n"]), int(tot["tt"])
+
+
 def bm25_topk(
     docs: DataFrame | None,
     queries: DataFrame,
@@ -219,89 +289,11 @@ def bm25_topk(
     enters the formula as the exact double ``tot/N`` both engines
     compute identically.
     """
-    from .similarity import _probe_is_small
-
     if k < 1 or k1 <= 0 or not 0.0 <= b <= 1.0:
         raise ValueError(f"need k >= 1, k1 > 0, 0 <= b <= 1; got {k}, {k1}, {b}")
-    small = _probe_is_small(queries, broadcast_max_queries)
-    if postings is None:
-        if docs is None:
-            raise ValueError("need docs or a persisted postings frame")
-        # batch-vocabulary restriction BEFORE the postings aggregation
-        # (broadcast-guarded like every query-side frame): the ranking
-        # path only ever reads batch-term rows, and tf/df/dl are
-        # per-token values, so results are bit-identical while the
-        # postings shuffle shrinks from corpus volume to the batch's
-        # relevant postings. Totals still come from the raw docs (N
-        # and avgdl are corpus facts, not batch facts).
-        qvocab = queries.select(
-            F.explode(tokens_col(query_text_col)).alias("tok")
-        ).distinct()
-        post = bm25_postings(
-            docs, text_col, id_col, vocab=qvocab if small else None
-        )
-        if totals is None:
-            totals = bm25_totals(docs, text_col, id_col)
-    else:
-        post = postings
-        if totals is None:
-            # derived fallback: exact except zero-token docs (no
-            # postings rows), which shift N/avgdl only
-            totals = post.select("id", "dl").distinct().agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("tot_tokens"),
-            )
-    if stats is None:
-        stats = bm25_stats(post)
-    tot = totals.agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt"),
-    ).head()
-    n, tt = int(tot["n"]), int(tot["tt"])
-    if n == 0:
-        raise ValueError("corpus is empty")
-    avgdl = float(tt) / float(n)
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokens_col(query_text_col)).alias("tok"),
-        )
-        .distinct()
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    # query terms meet the vocab-sized stats in an equi-join FIRST; the
-    # |Q|*terms-row result is what broadcasts into the postings join
-    qidf = qterms.join(stats, "tok").select("query_id", "tok", idf.alias("idf"))
-    tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
-    term_micro = F.round(F.lit(1_000_000) * F.col("idf") * tfnorm).cast("long")
-    joined = (
-        post.join(F.broadcast(qidf) if small else qidf, "tok")
-        .select("query_id", "id", term_micro.alias("__t"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("__t").alias("score_micro"))
-    )
-    order = (F.col("score_micro").desc(), F.col("id"))
-    salt = (hash_bucket(F.col("id").cast("string"), "swarm-bm25") % n_salts).cast("int")
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    survivors = (
-        joined.withColumn("salt", salt)
-        .withColumn("rk", F.row_number().over(w1))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score_micro", "rank")
-        .orderBy("query_id", "rank")
+    return _rank_all(
+        _Bm25Scorer(k1, b), docs, queries, k, text_col, id_col, query_id_col,
+        query_text_col, n_salts, broadcast_max_queries, postings, stats, totals,
     )
 
 
@@ -333,6 +325,25 @@ def load_bm25_bounds(spark, path: str) -> DataFrame:
     )
 
 
+def _salted_survivors(
+    scored: DataFrame, k: int, n_salts: int, salt_seed: str
+) -> DataFrame:
+    """Phase 1 of the salted two-phase top-k: the best k rows per
+    (query, salt) of a (query_id, id, score_micro) frame, ranked by
+    score descending, ties by id — no task sorts more than ~k rows per
+    (query, salt), and the union of the survivors holds every query's
+    true top k."""
+    order = (F.col("score_micro").desc(), F.col("id"))
+    salt = (hash_bucket(F.col("id").cast("string"), salt_seed) % n_salts).cast("int")
+    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
+    return (
+        scored.withColumn("salt", salt)
+        .withColumn("rk", F.row_number().over(w1))
+        .where(F.col("rk") <= k)
+        .drop("rk", "salt")
+    )
+
+
 def _two_phase_topk(
     scored: DataFrame, k: int, n_salts: int, salt_seed: str
 ) -> DataFrame:
@@ -340,18 +351,10 @@ def _two_phase_topk(
     two-phase top-k over a (query_id, id, score_micro) frame — rank by
     score descending, ties by id; no task sorts more than ~k rows per
     (query, salt)."""
-    order = (F.col("score_micro").desc(), F.col("id"))
-    salt = (hash_bucket(F.col("id").cast("string"), salt_seed) % n_salts).cast("int")
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    survivors = (
-        scored.withColumn("salt", salt)
-        .withColumn("rk", F.row_number().over(w1))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
+    w2 = Window.partitionBy("query_id").orderBy(F.col("score_micro").desc(), F.col("id"))
     return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
+        _salted_survivors(scored, k, n_salts, salt_seed)
+        .withColumn("rank", F.row_number().over(w2).cast("long"))
         .where(F.col("rank") <= k)
         .select("query_id", "id", "score_micro", "rank")
         .orderBy("query_id", "rank")
@@ -363,20 +366,12 @@ def _kth_score(
 ) -> DataFrame:
     """(query_id, theta): the EXACT k-th highest ``score_micro`` per
     query (ties by id — the retrieval tier's ranking order), absent
-    when a query has fewer than k scored docs. Salted two-phase rank so
-    no task ever sorts more than ~k rows per (query, salt)."""
-    order = (F.col("score_micro").desc(), F.col("id"))
-    salt = (hash_bucket(F.col("id").cast("string"), salt_seed) % n_salts).cast("int")
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    survivors = (
-        scored.withColumn("salt", salt)
-        .withColumn("rk", F.row_number().over(w1))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
+    when a query has fewer than k scored docs; phase 2 of
+    :func:`_two_phase_topk` keeps only rank k."""
+    w2 = Window.partitionBy("query_id").orderBy(F.col("score_micro").desc(), F.col("id"))
     return (
-        survivors.withColumn("rk", F.row_number().over(w2))
+        _salted_survivors(scored, k, n_salts, salt_seed)
+        .withColumn("rk", F.row_number().over(w2))
         .where(F.col("rk") == k)
         .select("query_id", F.col("score_micro").alias("theta"))
     )
@@ -393,6 +388,406 @@ def _materialize_small(df: DataFrame) -> DataFrame:
     local frame also broadcasts trivially into the downstream joins."""
     rows = df.collect()
     return df.sparkSession.createDataFrame(rows, df.schema)
+
+
+class _Bm25Scorer:
+    """BM25's side of :func:`_maxscore_topk`: idf-weighted DISTINCT
+    query terms, ``df`` as the posting-volume statistic, and no
+    exclusion slack (every contribution is non-negative). The upper
+    bound needs no corpus token total, so on the ad-hoc entry ``tt``
+    rides gate #1 instead of costing its own action."""
+
+    vol = "df"
+    salt, seed_salt = "swarm-bm25", "swarm-bm25p"
+    ub_needs_tt = False
+    stats = staticmethod(bm25_stats)
+
+    def __init__(self, k1: float, b: float):
+        self.k1, self.b = k1, b
+
+    def query_terms(self, qtoks: DataFrame, bcast) -> DataFrame:
+        return qtoks.distinct()
+
+    def weights(self, qterms: DataFrame, stats: DataFrame, n: int, tt) -> DataFrame:
+        if n == 0:
+            raise ValueError("corpus is empty")
+        idf = F.log(
+            F.lit(1.0)
+            + (F.lit(float(n)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+        )
+        return qterms.join(stats, "tok").select(
+            "query_id", "tok", idf.alias("idf"), "df"
+        )
+
+    def ub(self, tt) -> Column:
+        # the tf-norm at dl -> 0 bounds every posting's contribution
+        # (tf-norm rises with tf, falls with dl; round is monotone; +1
+        # absorbs float-rounding headroom)
+        k1, b = self.k1, self.b
+        ub_tfnorm = (F.col("max_tf") * F.lit(k1 + 1.0)) / (
+            F.col("max_tf") + F.lit(k1 * (1.0 - b))
+        )
+        return F.round(F.lit(1_000_000) * F.col("idf") * ub_tfnorm).cast("long") + 1
+
+    def score(self, joined: DataFrame, n: int, tt: int) -> DataFrame:
+        k1, b = self.k1, self.b
+        avgdl = float(tt) / float(n)
+        tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
+            F.col("tf")
+            + F.lit(k1)
+            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+        )
+        term_micro = F.round(F.lit(1_000_000) * F.col("idf") * tfnorm).cast("long")
+        return (
+            joined.select("query_id", "id", term_micro.alias("__t"))
+            .groupBy("query_id", "id")
+            .agg(F.sum("__t").alias("score_micro"))
+        )
+
+    def floor(self, cum: DataFrame, post: DataFrame):
+        return cum, F.col("theta")
+
+
+def _rank_all(
+    scorer, docs, queries, k, text_col, id_col, query_id_col, query_text_col,
+    n_salts, broadcast_max_queries, postings, stats, totals,
+) -> DataFrame:
+    """The exhaustive ranker behind :func:`bm25_topk` / :func:`lm_topk`
+    (and the pruned rankers' pre-gate): every doc sharing a query term
+    is scored by ``scorer``, then the salted two-phase top-k."""
+    post, totals, small = _probe_index(
+        docs, queries, postings, totals, text_col, id_col, query_text_col,
+        broadcast_max_queries,
+    )
+    if stats is None:
+        stats = scorer.stats(post)
+    n, tt = _sum_totals(totals)
+    bcast = F.broadcast if small else (lambda frame: frame)
+    qtoks = _query_tokens(queries, query_id_col, query_text_col)
+    # query terms meet the vocab-sized stats in an equi-join FIRST; the
+    # |Q|*terms-row result is what broadcasts into the postings join
+    qw = scorer.weights(scorer.query_terms(qtoks, bcast), stats, n, tt)
+    return _two_phase_topk(
+        scorer.score(post.join(bcast(qw), "tok"), n, tt), k, n_salts, scorer.salt
+    )
+
+
+def _maxscore_topk(
+    scorer,
+    docs: DataFrame | None,
+    queries: DataFrame,
+    k: int,
+    text_col: str,
+    id_col: str,
+    query_id_col: str,
+    query_text_col: str,
+    n_salts: int,
+    broadcast_max_queries: int | None,
+    postings: DataFrame | None,
+    stats: DataFrame | None,
+    totals: DataFrame | None,
+    bounds: DataFrame | None,
+    seed_terms: int,
+    min_prune_queries: int | None,
+) -> DataFrame:
+    """The MaxScore gate ladder behind :func:`bm25_pruned` and
+    :func:`lm_pruned`: seed terms -> volume gate -> eligibility gate ->
+    θ -> essential prefix -> gate #2 -> verify ∪ θ-null slice. The
+    ``scorer`` (:class:`_Bm25Scorer` / :class:`_LmScorer`) supplies
+    only what differs between the rankers: the query-term weights with
+    their volume statistic (``vol``) and per-term upper bound, one
+    ``score`` turning postings ⋈ query terms into (query_id, id,
+    score_micro), the exclusion ``floor`` (θ minus the ranker's
+    normalizer slack) and the salt seeds."""
+    if seed_terms < 1:
+        raise ValueError(f"seed_terms must be >= 1, got {seed_terms}")
+    pre_qn = None
+    if postings is None and min_prune_queries is not None and min_prune_queries > 0:
+        cap = max(min_prune_queries, broadcast_max_queries or 0)
+        pre_qn = queries.limit(cap + 1).count()
+        if pre_qn < min_prune_queries:
+            return _rank_all(
+                scorer, docs, queries, k, text_col, id_col, query_id_col,
+                query_text_col, n_salts, broadcast_max_queries, None, stats, totals,
+            )
+    # ad-hoc entry: the gate aggregations below are separate driver
+    # actions, and WITHOUT caching each one re-derives the postings
+    # (explode + aggregation over the raw corpus) from scratch —
+    # measured as the bulk of this entry shape's 1.5x-over-exhaustive
+    # bench overhead. persist() keeps lineage (executor loss
+    # recomputes, unlike localCheckpoint), and the vocab-sized
+    # stats/bounds derivations below reuse the cached frame.
+    post, totals, small = _probe_index(
+        docs, queries, postings, totals, text_col, id_col, query_text_col,
+        broadcast_max_queries, pre_qn, persist=True,
+    )
+    if stats is None:
+        stats = scorer.stats(post)
+    if bounds is None:
+        bounds = bm25_term_bounds(post)
+    if postings is None and not scorer.ub_needs_tt:
+        # ad-hoc entry: n (idf's only corpus input needed BEFORE the
+        # gate decision) is a column-pruned count — no tokenize scan;
+        # tt (avgdl's input, used only by the scoring expressions that
+        # run after the gates) rides the gate action below, so the
+        # totals tokenize and the postings materialization run as
+        # parallel stages of ONE job instead of two serial actions
+        n, tt = int(docs.count()), None
+    else:
+        n, tt = _sum_totals(totals)
+
+    def _b(frame):
+        return F.broadcast(frame) if small else frame
+
+    vol = scorer.vol
+    # The gate machinery below runs ~5 SERIAL driver actions (vol,
+    # elig_vol, theta, ev, final) and each one re-executed this whole
+    # query-side lineage — queries tokenize + explode + distinct +
+    # stats/bounds joins + the seed window — measured as the bulk of
+    # the pruned probes' builder wall (13-15 s of a 19 s lm_pruned_idx
+    # at sf0.1, the same subtrees rebuilt per action). These frames are
+    # METADATA-sized by contract (<= |Q|·query_terms rows), so persist
+    # them once (r14, guide §5: cache exactly what is reused across
+    # actions); the first gate action materializes them as a side
+    # effect and every later action + the returned plan reads the
+    # cache.
+    qterms = scorer.query_terms(
+        _query_tokens(queries, query_id_col, query_text_col), _b
+    ).persist()
+    qw = scorer.weights(qterms, stats, n, tt).persist()
+    # LEFT join: a query term missing from the bounds table (a partial
+    # bounds build) gets an infinite upper bound — always essential, so
+    # incomplete bounds degrade pruning, never correctness. (A PRESENT
+    # but stale max_tf that underestimates a newer wave's true max
+    # would break the bound — fold bounds with the same groupBy-max as
+    # the other statistics when appending.)
+    qub = qw.join(bounds, "tok", "left").select(
+        "query_id",
+        "tok",
+        vol,
+        F.when(
+            # 2^52: unreachable by any real theta (scores are ~2^31)
+            # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
+            F.col("max_tf").isNull(), F.lit(1 << 52)
+        )
+        .otherwise(scorer.ub(tt))
+        .alias("ub"),
+    ).persist()
+
+    # seed from the top-`seed_terms` upper-bound terms, not just one:
+    # on rare-tail vocabularies the single top term's posting list can
+    # hold fewer than k docs, leaving theta undefined and pruning
+    # disabled; a handful of rare lists still seeds cheaply, and theta
+    # stays a LOWER bound whatever the seed subset is (any doc scoring
+    # >= theta is in the candidate set by the exclusion bound, so the
+    # proof never needs seed membership). Terms whose volume statistic
+    # exceeds max(k, N/8) never seed: a term matching an eighth of the
+    # corpus cannot give a selective theta, and exactly scoring its
+    # posting list costs a large fraction of the exhaustive plan
+    # (measured: short queries whose rare terms ran out pulled stopword
+    # posting lists into seeding — 2.9x the exhaustive wall on the
+    # doc-length Zipf batch). cf >= df, so LM's cf cap errs toward the
+    # exhaustive route, never toward an expensive seed.
+    seed_cap = max(k, n // 8)
+    wseed = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("tok"))
+    seed_term = (
+        qub.where(F.col(vol) <= F.lit(seed_cap))
+        .withColumn("__r", F.row_number().over(wseed))
+        .where(F.col("__r") <= seed_terms)
+        .select("query_id", "tok")
+        .persist()
+    )
+
+    # -------- adaptive effectiveness gate #1 (metadata-priced: one
+    # aggregation over the |Q|*terms-row stats join, NO postings scan).
+    # Pruning exists to make candidates follow rare posting lists; when
+    # the top-ub "rare" seed terms already carry > 1/3 of the batch's
+    # total posting volume, the vocabulary has no rarity to exploit
+    # (the saturated case: min df ≈ max df) and the seed/verify passes
+    # would pay joins for ~zero cut — measured slower than exhaustive
+    # at 10x. The second condition prices the seed VERIFY fan-out:
+    # each seed pair is exactly scored against its doc's batch-vocab
+    # posting rows, so the seed cost is ~v_seed·(slice_rows/N), and on
+    # doc-length query batches (batch vocab ≈ corpus vocab) that alone
+    # reaches exhaustive volume even when v_seed looks tiny — measured
+    # before this term: seed scoring ≈ 0.9× the exhaustive aggregation
+    # on the full-doc Zipf batch. Results are identical either way
+    # (the pruning proof), so fall back to the exhaustive plan shape.
+    # slice_rows (Σ vol over the batch's DISTINCT tokens — the seed
+    # verify's scan width) rides the SAME action as the vol gate: both
+    # are 1-row aggregates, so a crossJoin folds them into one job —
+    # the second driver action was pure fixed overhead at bench scale
+    slice_agg = (
+        qterms.select("tok")
+        .distinct()
+        .join(stats, "tok")
+        .agg(F.coalesce(F.sum(vol), F.lit(0)).alias("slice_rows"))
+    )
+    gate1 = (
+        qterms.join(stats, "tok")
+        .join(seed_term.withColumn("__s", F.lit(1)), ["query_id", "tok"], "left")
+        .agg(
+            F.coalesce(F.sum(vol), F.lit(0)).alias("v_all"),
+            F.coalesce(
+                F.sum(F.when(F.col("__s").isNotNull(), F.col(vol)).otherwise(0)),
+                F.lit(0),
+            ).alias("v_seed"),
+            F.coalesce(
+                F.sum(F.when(F.col("__s").isNotNull(), F.lit(1)).otherwise(0)),
+                F.lit(0),
+            ).alias("n_seed"),
+        )
+        .crossJoin(slice_agg)
+    )
+    if not scorer.ub_needs_tt:
+        gate1 = gate1.crossJoin(
+            totals.agg(F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("__tt"))
+        )
+    g1 = gate1.head()
+    if tt is None:
+        tt = int(g1["__tt"])
+    qw_b = _b(qw)
+    # batch-vocabulary scan restriction for the exact-scoring joins:
+    # one semi-join on tok emits Σ df over the batch's DISTINCT tokens
+    # (each posting row once), where joining candidates by bare id
+    # would fan every candidate out by its doc's FULL posting list
+    # (~dl rows) before the query-term filter — measured 1.6x SLOWER
+    # than exhaustive at 10x data before this cut
+    qtok_b = _b(qw.select("tok").distinct())
+
+    def _exhaustive():
+        return _two_phase_topk(
+            scorer.score(post.join(qw_b, "tok"), n, tt), k, n_salts, scorer.salt
+        )
+
+    def _exact_scores(pairs: DataFrame) -> DataFrame:
+        # batch-vocab postings → candidate docs (AQE broadcasts the
+        # pair frame when pruning made it small) → per-query terms
+        return scorer.score(
+            post.join(qtok_b, "tok").join(pairs, "id").join(qw_b, ["query_id", "tok"]),
+            n,
+            tt,
+        )
+
+    # no seed term passed the volume cap (fully saturated vocabulary):
+    # theta is impossible, so skip the empty seed/verify machinery —
+    # this ride-along count makes the skip metadata-priced
+    if int(g1["n_seed"]) == 0:
+        return _exhaustive()
+    v_all = int(g1["v_all"])
+    slice_rows = int(g1["slice_rows"])
+    v_seed = int(g1["v_seed"])
+    if (
+        v_all == 0
+        or n == 0
+        or v_seed * 3 > v_all
+        or v_seed * (float(slice_rows) / float(n)) * 3.0 > float(v_all)
+    ):
+        return _exhaustive()
+
+    # df-bounded by the seed cap and reused by the eligibility count,
+    # the routing gate and the theta scoring — persist (§5)
+    seed_pairs = (
+        post.join(_b(seed_term), "tok").select("query_id", "id").distinct().persist()
+    )
+    # pre-route BEFORE exact seed scoring: a query with fewer than k
+    # seed docs can never get a theta, so its pairs are dropped here —
+    # exact scoring (the fan-out join) runs only over queries that can
+    # prune; the k-th-score set is unchanged (theta exists iff >= k
+    # seed docs), hence results are identical
+    elig_q = (
+        seed_pairs.groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("__nsd"))
+        .where(F.col("__nsd") >= k)
+        .select("query_id")
+    )
+    # -------- routing-volume gate, evaluated BEFORE seed scoring:
+    # theta exists iff a query has >= k seed docs (every seed pair gets
+    # an exact score), so the theta-defined set IS elig_q and its
+    # volume share is known without scoring anything. The split plan
+    # pays a second aggregated branch + union before top-k, a cost
+    # ~O(batch volume) — worth it only when the defined slice carries a
+    # real share of that volume (measured: with ~1.5% of queries
+    # eligible, the split plan ran 1.8x the plain exhaustive on the
+    # doc-length Zipf batch; and paying seed scoring BEFORE this check
+    # was the bulk of the pruned ranker's 1.5x-over-exhaustive bench
+    # overhead on exactly that batch shape). The <= |Q|-row per-query
+    # volume frame comes back to the driver in ONE action and doubles
+    # as the local eligible set, so the theta job never recomputes the
+    # seed-doc counting subtree.
+    elig_vol = (
+        qterms.join(stats, "tok")
+        .join(_b(elig_q), "query_id")
+        .groupBy("query_id")
+        .agg(F.coalesce(F.sum(vol), F.lit(0)).alias("v_q"))
+    )
+    elig_rows = elig_vol.collect()
+    v_def = sum(int(r["v_q"]) for r in elig_rows)
+    if v_def == 0 or v_def * 8 < v_all:
+        return _exhaustive()
+    elig_loc = queries.sparkSession.createDataFrame(
+        elig_rows, elig_vol.schema
+    ).select("query_id")
+    seed_pairs = seed_pairs.join(F.broadcast(elig_loc), "query_id")
+    # theta is <= |Q| rows; materialized ONCE as a driver-local frame
+    # so the seed scoring does not re-execute under gate #2's action
+    # and again under the final plan (it is the priciest subplan of
+    # the pruned path — three executions showed up directly in probe
+    # wall time), and so executor loss cannot strand it the way
+    # localCheckpoint blocks would
+    theta = _materialize_small(
+        _kth_score(_exact_scores(seed_pairs), k, n_salts, scorer.seed_salt)
+    )
+
+    # -------- per-query routing: theta-DEFINED queries take the
+    # candidate-verify path; theta-null queries (fewer than k seed
+    # docs — e.g. every seed term's posting list points at the same
+    # near-dup cluster) take the exhaustive plan SHAPE on their slice.
+    # Before this split, a starved majority forced the all-or-nothing
+    # gate and the whole batch paid seed overhead for zero cut; now a
+    # mixed batch prunes where theta exists and pays nothing extra
+    # where it doesn't (the null branch IS the exhaustive join).
+    wcum = (
+        Window.partitionBy("query_id")
+        .orderBy(F.col("ub").asc(), F.col("tok"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum, floor = scorer.floor(qub.withColumn("cum", F.sum("ub").over(wcum)), post)
+    ess = (
+        cum.join(_b(theta), "query_id")
+        .where(F.col("cum") >= floor)
+        .select("query_id", "tok")
+        .persist()
+    )
+    # -------- adaptive gate #2: theta may still leave most of the
+    # theta-DEFINED queries' volume essential (flat upper bounds).
+    # Metadata-priced: v_def is already on the driver, so this action
+    # prices only the essential share of the defined slice; if that
+    # isn't a real cut, verify would join candidate pairs that are
+    # ~all pairs: take the exhaustive shape for everything instead.
+    theta_q = theta.select("query_id")
+    ev = (
+        qterms.join(theta_q, "query_id")
+        .join(stats, "tok")
+        .join(ess.withColumn("__e", F.lit(1)), ["query_id", "tok"], "left")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("__e").isNotNull(), F.col(vol)).otherwise(0)),
+                F.lit(0),
+            ).alias("v_ess"),
+        )
+        .head()
+    )
+    if int(ev["v_ess"]) * 3 > 2 * v_def:
+        return _exhaustive()
+
+    cand = post.join(_b(ess), "tok").select("query_id", "id").distinct()
+    exhaustive_slice = scorer.score(
+        post.join(_b(qw.join(theta_q, "query_id", "left_anti")), "tok"), n, tt
+    )
+    return _two_phase_topk(
+        _exact_scores(cand).unionByName(exhaustive_slice), k, n_salts, scorer.salt
+    )
 
 
 def bm25_pruned(
@@ -487,370 +882,13 @@ def bm25_pruned(
     big stored index a single stopword-bearing query is exactly where
     MaxScore earns its keep, and the index-side gate actions are
     metadata-priced there. ``None`` disables the pre-gate."""
-    from .similarity import _probe_is_small
-
     if k < 1 or k1 <= 0 or not 0.0 <= b <= 1.0:
         raise ValueError(f"need k >= 1, k1 > 0, 0 <= b <= 1; got {k}, {k1}, {b}")
-    if seed_terms < 1:
-        raise ValueError(f"seed_terms must be >= 1, got {seed_terms}")
-    pre_qn = None
-    if postings is None and min_prune_queries is not None and min_prune_queries > 0:
-        cap = max(min_prune_queries, broadcast_max_queries or 0)
-        pre_qn = queries.limit(cap + 1).count()
-        if pre_qn < min_prune_queries:
-            return bm25_topk(
-                docs,
-                queries,
-                k=k,
-                k1=k1,
-                b=b,
-                text_col=text_col,
-                id_col=id_col,
-                query_id_col=query_id_col,
-                query_text_col=query_text_col,
-                n_salts=n_salts,
-                broadcast_max_queries=broadcast_max_queries,
-                stats=stats,
-                totals=totals,
-            )
-    if postings is None:
-        if docs is None:
-            raise ValueError("need docs or a persisted postings frame")
-        # ad-hoc entry: the gate aggregations below are separate driver
-        # actions, and WITHOUT caching each one re-derives the postings
-        # (explode + aggregation over the raw corpus) from scratch —
-        # measured as the bulk of this entry shape's 1.5x-over-
-        # exhaustive bench overhead. persist() keeps lineage (executor
-        # loss recomputes, unlike localCheckpoint), and the vocab-sized
-        # stats/bounds derivations below reuse the cached frame.
-        # ... and the batch-vocabulary restriction shrinks what gets
-        # cached AND every downstream scan to the batch's relevant
-        # postings (see bm25_postings: per-token values are identical)
-        qvocab = queries.select(
-            F.explode(tokens_col(query_text_col)).alias("tok")
-        ).distinct()
-        # the pre-gate probe already counted past the broadcast cap, so
-        # its result settles the broadcast guard without a second action
-        small = (
-            broadcast_max_queries is not None and pre_qn <= broadcast_max_queries
-            if pre_qn is not None
-            else _probe_is_small(queries, broadcast_max_queries)
-        )
-        post = bm25_postings(
-            docs, text_col, id_col, vocab=qvocab if small else None
-        ).persist()
-        if totals is None:
-            totals = bm25_totals(docs, text_col, id_col)
-    else:
-        small = _probe_is_small(queries, broadcast_max_queries)
-        post = postings
-        if totals is None:
-            totals = post.select("id", "dl").distinct().agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("tot_tokens"),
-            )
-    if stats is None:
-        stats = bm25_stats(post)
-    if bounds is None:
-        bounds = bm25_term_bounds(post)
-    if postings is None:
-        # ad-hoc entry: n (idf's only corpus input needed BEFORE the
-        # gate decision) is a column-pruned count — no tokenize scan;
-        # tt (avgdl's input, used only by the scoring expressions that
-        # run after the gates) rides the gate action below, so the
-        # totals tokenize and the postings materialization run as
-        # parallel stages of ONE job instead of two serial actions
-        n = int(docs.count())
-        tt = None
-    else:
-        tot = totals.agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
-            F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt"),
-        ).head()
-        n, tt = int(tot["n"]), int(tot["tt"])
-    if n == 0:
-        raise ValueError("corpus is empty")
-
-    def _b(frame):
-        return F.broadcast(frame) if small else frame
-
-    # The gate machinery below runs ~5 SERIAL driver actions (vol,
-    # elig_vol, theta, ev, final) and each one re-executed this whole
-    # query-side lineage — queries tokenize + explode + distinct +
-    # stats/bounds joins + the seed window — measured as the bulk of
-    # the pruned probes' builder wall (13-15 s of a 19 s lm_pruned_idx
-    # at sf0.1, the same subtrees rebuilt per action). These frames are
-    # METADATA-sized by contract (<= |Q|·query_terms rows), so persist
-    # them once (r14, guide §5: cache exactly what is reused across
-    # actions); the first gate action materializes them as a side
-    # effect and every later action + the returned plan reads the
-    # cache.
-    qterms = (
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.explode(tokens_col(query_text_col)).alias("tok"),
-        )
-        .distinct()
-        .persist()
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    qidf = qterms.join(stats, "tok").select(
-        "query_id", "tok", idf.alias("idf"), "df"
-    ).persist()
-    ub_tfnorm = (F.col("max_tf") * F.lit(k1 + 1.0)) / (
-        F.col("max_tf") + F.lit(k1 * (1.0 - b))
-    )
-    # LEFT join: a query term missing from the bounds table (a partial
-    # bounds build) gets an infinite upper bound — always essential, so
-    # incomplete bounds degrade pruning, never correctness. (A PRESENT
-    # but stale max_tf that underestimates a newer wave's true max
-    # would break the bound — fold bounds with the same groupBy-max as
-    # the other statistics when appending.)
-    qub = qidf.join(bounds, "tok", "left").select(
-        "query_id",
-        "tok",
-        "df",
-        F.when(
-            # 2^52: unreachable by any real theta (scores are ~2^31)
-            # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
-            F.col("max_tf").isNull(), F.lit(1 << 52)
-        )
-        .otherwise(
-            F.round(F.lit(1_000_000) * F.col("idf") * ub_tfnorm).cast("long") + 1
-        )
-        .alias("ub"),
-    ).persist()
-
-    # seed from the top-`seed_terms` upper-bound terms, not just one:
-    # on rare-tail vocabularies the single top term's posting list can
-    # hold fewer than k docs, leaving theta undefined and pruning
-    # disabled; a handful of rare lists still seeds cheaply, and theta
-    # stays a LOWER bound whatever the seed subset is (any doc scoring
-    # >= theta is in the candidate set by the exclusion bound, so the
-    # proof never needs seed membership). Terms with df > max(k, N/8)
-    # never seed: a term matching an eighth of the corpus cannot give
-    # a selective theta, and exactly scoring its posting list costs a
-    # large fraction of the exhaustive plan (measured: short queries
-    # whose rare terms ran out pulled stopword posting lists into
-    # seeding — 2.9x the exhaustive wall on the doc-length Zipf batch).
-    seed_df_cap = max(k, n // 8)
-    wseed = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("tok"))
-    seed_term = (
-        qub.where(F.col("df") <= F.lit(seed_df_cap))
-        .withColumn("__r", F.row_number().over(wseed))
-        .where(F.col("__r") <= seed_terms)
-        .select("query_id", "tok")
-        .persist()
-    )
-
-    # -------- adaptive effectiveness gate #1 (metadata-priced: one
-    # aggregation over the |Q|*terms-row stats join, NO postings scan).
-    # Pruning exists to make candidates follow rare posting lists; when
-    # the top-ub "rare" seed terms already carry > 1/3 of the batch's
-    # total posting volume, the vocabulary has no rarity to exploit
-    # (the saturated case: min df ≈ max df) and the seed/verify passes
-    # would pay joins for ~zero cut — measured slower than exhaustive
-    # at 10x. The second condition prices the seed VERIFY fan-out:
-    # each seed pair is exactly scored against its doc's batch-vocab
-    # posting rows, so the seed cost is ~v_seed·(slice_rows/N), and on
-    # doc-length query batches (batch vocab ≈ corpus vocab) that alone
-    # reaches exhaustive volume even when v_seed looks tiny — measured
-    # before this term: seed scoring ≈ 0.9× the exhaustive aggregation
-    # on the full-doc Zipf batch. Results are identical either way
-    # (the pruning proof), so fall back to the exhaustive plan shape.
-    # slice_rows (Σ df over the batch's DISTINCT tokens — the seed
-    # verify's scan width) rides the SAME action as the vol gate: both
-    # are 1-row aggregates, so a crossJoin folds them into one job —
-    # the second driver action was pure fixed overhead at bench scale
-    slice_agg = (
-        qterms.select("tok")
-        .distinct()
-        .join(stats, "tok")
-        .agg(F.coalesce(F.sum("df"), F.lit(0)).alias("slice_rows"))
-    )
-    vol = (
-        qterms.join(stats, "tok")
-        .join(seed_term.withColumn("__s", F.lit(1)), ["query_id", "tok"], "left")
-        .agg(
-            F.coalesce(F.sum("df"), F.lit(0)).alias("v_all"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.col("df")).otherwise(0)),
-                F.lit(0),
-            ).alias("v_seed"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.lit(1)).otherwise(0)),
-                F.lit(0),
-            ).alias("n_seed"),
-        )
-        .crossJoin(slice_agg)
-        .crossJoin(
-            totals.agg(F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("__tt"))
-        )
-        .head()
-    )
-    if tt is None:
-        tt = int(vol["__tt"])
-    avgdl = float(tt) / float(n)
-    tfnorm = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    )
-    term_micro = F.round(F.lit(1_000_000) * F.col("idf") * tfnorm).cast("long")
-    qidf_b = _b(qidf)
-    # batch-vocabulary scan restriction for the exact-scoring joins:
-    # one semi-join on tok emits Σ df over the batch's DISTINCT tokens
-    # (each posting row once), where joining candidates by bare id
-    # would fan every candidate out by its doc's FULL posting list
-    # (~dl rows) before the query-term filter — measured 1.6x SLOWER
-    # than exhaustive at 10x data before this cut
-    qtok_b = _b(qidf.select("tok").distinct())
-
-    def _exhaustive():
-        joined = (
-            post.join(qidf_b, "tok")
-            .select("query_id", "id", term_micro.alias("__t"))
-            .groupBy("query_id", "id")
-            .agg(F.sum("__t").alias("score_micro"))
-        )
-        return _two_phase_topk(joined, k, n_salts, "swarm-bm25")
-
-    def _exact_scores(pairs: DataFrame) -> DataFrame:
-        # batch-vocab postings → candidate docs (AQE broadcasts the
-        # pair frame when pruning made it small) → per-query terms
-        return (
-            post.join(qtok_b, "tok")
-            .join(pairs, "id")
-            .join(qidf_b, ["query_id", "tok"])
-            .select("query_id", "id", term_micro.alias("__t"))
-            .groupBy("query_id", "id")
-            .agg(F.sum("__t").alias("score_micro"))
-        )
-
-    # no seed term passed the df cap (fully saturated vocabulary):
-    # theta is impossible, so skip the empty seed/verify machinery —
-    # this ride-along count makes the skip metadata-priced
-    if int(vol["n_seed"]) == 0:
-        return _exhaustive()
-    v_all = int(vol["v_all"])
-    slice_rows = int(vol["slice_rows"])
-    v_seed = int(vol["v_seed"])
-    if (
-        v_all == 0
-        or v_seed * 3 > v_all
-        or v_seed * (float(slice_rows) / float(n)) * 3.0 > float(v_all)
-    ):
-        return _exhaustive()
-
-    # df-bounded by the seed df cap and reused by the eligibility
-    # count, the routing gate and the theta scoring — persist (§5)
-    seed_pairs = (
-        post.join(_b(seed_term), "tok").select("query_id", "id").distinct().persist()
-    )
-    # pre-route BEFORE exact seed scoring: a query with fewer than k
-    # seed docs can never get a theta, so its pairs are dropped here —
-    # exact scoring (the fan-out join) runs only over queries that can
-    # prune; the k-th-score set is unchanged (theta exists iff >= k
-    # seed docs), hence results are identical
-    elig_q = (
-        seed_pairs.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("__nsd"))
-        .where(F.col("__nsd") >= k)
-        .select("query_id")
-    )
-    # -------- routing-volume gate, evaluated BEFORE seed scoring:
-    # theta exists iff a query has >= k seed docs (every seed pair gets
-    # an exact score), so the theta-defined set IS elig_q and its
-    # volume share is known without scoring anything. The split plan
-    # pays a second aggregated branch + union before top-k, a cost
-    # ~O(batch volume) — worth it only when the defined slice carries a
-    # real share of that volume (measured: with ~1.5% of queries
-    # eligible, the split plan ran 1.8x the plain exhaustive on the
-    # doc-length Zipf batch; and paying seed scoring BEFORE this check
-    # was the bulk of the pruned ranker's 1.5x-over-exhaustive bench
-    # overhead on exactly that batch shape). The <= |Q|-row per-query
-    # volume frame comes back to the driver in ONE action and doubles
-    # as the local eligible set, so the theta job never recomputes the
-    # seed-doc counting subtree.
-    elig_vol = (
-        qterms.join(stats, "tok")
-        .join(_b(elig_q), "query_id")
-        .groupBy("query_id")
-        .agg(F.coalesce(F.sum("df"), F.lit(0)).alias("v_q"))
-    )
-    elig_rows = elig_vol.collect()
-    v_def = sum(int(r["v_q"]) for r in elig_rows)
-    if v_def == 0 or v_def * 8 < v_all:
-        return _exhaustive()
-    elig_loc = queries.sparkSession.createDataFrame(
-        elig_rows, elig_vol.schema
-    ).select("query_id")
-    seed_pairs = seed_pairs.join(F.broadcast(elig_loc), "query_id")
-    # theta is <= |Q| rows; materialized ONCE as a driver-local frame
-    # so the seed scoring does not re-execute under gate #2's action
-    # and again under the final plan (it is the priciest subplan of
-    # the pruned path — three executions showed up directly in probe
-    # wall time), and so executor loss cannot strand it the way
-    # localCheckpoint blocks would
-    theta = _materialize_small(
-        _kth_score(_exact_scores(seed_pairs), k, n_salts, "swarm-bm25p")
-    )
-
-    # -------- per-query routing: theta-DEFINED queries take the
-    # candidate-verify path; theta-null queries (fewer than k seed
-    # docs — e.g. every seed term's posting list points at the same
-    # near-dup cluster) take the exhaustive plan SHAPE on their slice.
-    # Before this split, a starved majority forced the all-or-nothing
-    # gate and the whole batch paid seed overhead for zero cut; now a
-    # mixed batch prunes where theta exists and pays nothing extra
-    # where it doesn't (the null branch IS the exhaustive join).
-    wcum = (
-        Window.partitionBy("query_id")
-        .orderBy(F.col("ub").asc(), F.col("tok"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ess = (
-        qub.withColumn("cum", F.sum("ub").over(wcum))
-        .join(_b(theta), "query_id")
-        .where(F.col("cum") >= F.col("theta"))
-        .select("query_id", "tok")
-        .persist()
-    )
-    # -------- adaptive gate #2: theta may still leave most of the
-    # theta-DEFINED queries' volume essential (flat upper bounds).
-    # Metadata-priced: v_def is already on the driver, so this action
-    # prices only the essential share of the defined slice; if that
-    # isn't a real cut, verify would join candidate pairs that are
-    # ~all pairs: take the exhaustive shape for everything instead.
-    theta_q = theta.select("query_id")
-    ev = (
-        qterms.join(theta_q, "query_id")
-        .join(stats, "tok")
-        .join(ess.withColumn("__e", F.lit(1)), ["query_id", "tok"], "left")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__e").isNotNull(), F.col("df")).otherwise(0)),
-                F.lit(0),
-            ).alias("v_ess"),
-        )
-        .head()
-    )
-    if int(ev["v_ess"]) * 3 > 2 * v_def:
-        return _exhaustive()
-
-    cand = post.join(_b(ess), "tok").select("query_id", "id").distinct()
-    pruned = _exact_scores(cand)
-    exhaustive_slice = (
-        post.join(_b(qidf.join(theta_q, "query_id", "left_anti")), "tok")
-        .select("query_id", "id", term_micro.alias("__t"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("__t").alias("score_micro"))
-    )
-    return _two_phase_topk(
-        pruned.unionByName(exhaustive_slice), k, n_salts, "swarm-bm25"
+    return _maxscore_topk(
+        _Bm25Scorer(k1, b),
+        docs, queries, k, text_col, id_col, query_id_col, query_text_col,
+        n_salts, broadcast_max_queries, postings, stats, totals, bounds,
+        seed_terms, min_prune_queries,
     )
 
 
@@ -905,6 +943,78 @@ def lm_cf_stats(postings: DataFrame) -> DataFrame:
     return postings.groupBy("tok").agg(F.sum("tf").cast("long").alias("cf"))
 
 
+class _LmScorer:
+    """Dirichlet query likelihood's side of :func:`_maxscore_topk`
+    (bound and normalizer slack: see :func:`lm_pruned`): query terms
+    keep their multiplicity ``qtf`` and ``cf`` is the volume statistic.
+    The upper bound needs the corpus token total |C|, so ``tt`` is
+    resolved before the gates on both entry shapes."""
+
+    vol = "cf"
+    salt, seed_salt = "swarm-lm", "swarm-lmp"
+    ub_needs_tt = True
+    stats = staticmethod(lm_cf_stats)
+
+    def __init__(self, mu: float):
+        self.mu = mu
+
+    def query_terms(self, qtoks: DataFrame, bcast) -> DataFrame:
+        # |q| counts every query token, corpus-absent terms included
+        self.qlen_b = bcast(
+            qtoks.groupBy("query_id").agg(F.count(F.lit(1)).cast("long").alias("qlen"))
+        )
+        return qtoks.groupBy("query_id", "tok").agg(
+            F.count(F.lit(1)).cast("long").alias("qtf")
+        )
+
+    def weights(self, qterms: DataFrame, stats: DataFrame, n: int, tt) -> DataFrame:
+        if tt == 0:
+            raise ValueError("corpus has no tokens")
+        return qterms.join(stats, "tok").select("query_id", "tok", "qtf", "cf")
+
+    def _ln_micro(self, tf_col: Column, tt: int) -> Column:
+        return F.round(
+            F.lit(1_000_000.0)
+            * F.log(
+                F.lit(1.0) + (tf_col * F.lit(float(tt))) / (F.lit(self.mu) * F.col("cf"))
+            )
+        ).cast("long")
+
+    def _norm(self, dl_col: Column) -> Column:
+        return F.round(
+            F.lit(1_000_000.0) * F.log(F.lit(self.mu) / (dl_col + F.lit(self.mu)))
+        ).cast("long")
+
+    def ub(self, tt: int) -> Column:
+        return F.col("qtf") * self._ln_micro(F.col("max_tf"), tt) + 1
+
+    def score(self, joined: DataFrame, n: int, tt: int) -> DataFrame:
+        term_micro = F.col("qtf") * self._ln_micro(F.col("tf"), tt)
+        pairs = (
+            joined.select("query_id", "id", "dl", term_micro.alias("__t"))
+            .groupBy("query_id", "id")
+            .agg(F.sum("__t").alias("__s"), F.max("dl").alias("dl"))
+        )
+        return pairs.join(self.qlen_b, "query_id").select(
+            "query_id",
+            "id",
+            (F.col("__s") + F.col("qlen") * self._norm(F.col("dl"))).alias("score_micro"),
+        )
+
+    def floor(self, cum: DataFrame, post: DataFrame):
+        # slack = the normalizer at the minimum posting dl. On the
+        # ad-hoc entry the postings are batch-vocabulary-restricted:
+        # min dl over docs holding a batch term is tighter and still
+        # covers every candidate. The scan runs here, after the routing
+        # gates, so the saturated/starved fallbacks never pay it.
+        min_dl = int(
+            post.agg(F.coalesce(F.min("dl"), F.lit(0)).alias("m")).head()["m"]
+        )
+        return cum.join(self.qlen_b, "query_id"), F.col("theta") - F.col(
+            "qlen"
+        ) * self._norm(F.lit(min_dl))
+
+
 def lm_topk(
     docs: DataFrame | None,
     queries: DataFrame,
@@ -947,90 +1057,11 @@ def lm_topk(
     stats in an equi-join BEFORE the guarded broadcast into the
     postings join; the salted two-phase top-k bounds every window task
     at ~k rows."""
-    from .similarity import _probe_is_small
-
     if k < 1 or mu <= 0:
         raise ValueError(f"need k >= 1 and mu > 0; got {k}, {mu}")
-    small = _probe_is_small(queries, broadcast_max_queries)
-    if postings is None:
-        if docs is None:
-            raise ValueError("need docs or a persisted postings frame")
-        # batch-vocabulary restriction — see bm25_topk: cf/tf/dl are
-        # per-token values, identical for the batch's terms; totals
-        # (tt is the corpus fact Dirichlet smoothing divides by) still
-        # come from the raw docs
-        qvocab = queries.select(
-            F.explode(tokens_col(query_text_col)).alias("tok")
-        ).distinct()
-        post = bm25_postings(
-            docs, text_col, id_col, vocab=qvocab if small else None
-        )
-        if totals is None:
-            totals = bm25_totals(docs, text_col, id_col)
-    else:
-        post = postings
-        if totals is None:
-            totals = post.select("id", "dl").distinct().agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("tot_tokens"),
-            )
-    if cf_stats is None:
-        cf_stats = lm_cf_stats(post)
-    tot = totals.agg(
-        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt")
-    ).head()
-    tt = int(tot["tt"])
-    if tt == 0:
-        raise ValueError("corpus has no tokens")
-    qtoks = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(tokens_col(query_text_col)).alias("tok"),
-    )
-    qterms = qtoks.groupBy("query_id", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("qtf")
-    )
-    qlen = qtoks.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("qlen")
-    )
-    # query terms meet the vocab-sized cf stats FIRST (<= |Q|*terms rows)
-    qcf = qterms.join(cf_stats, "tok").select("query_id", "tok", "qtf", "cf")
-    term_micro = F.col("qtf") * F.round(
-        F.lit(1_000_000.0)
-        * F.log(
-            F.lit(1.0)
-            + (F.col("tf") * F.lit(float(tt))) / (F.lit(mu) * F.col("cf"))
-        )
-    ).cast("long")
-    pairs = (
-        post.join(F.broadcast(qcf) if small else qcf, "tok")
-        .select("query_id", "id", "dl", term_micro.alias("__t"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("__t").alias("__s"), F.max("dl").alias("dl"))
-    )
-    norm_micro = F.col("qlen") * F.round(
-        F.lit(1_000_000.0) * F.log(F.lit(mu) / (F.col("dl") + F.lit(mu)))
-    ).cast("long")
-    scored = (
-        pairs.join(F.broadcast(qlen) if small else qlen, "query_id")
-        .select(
-            "query_id", "id", (F.col("__s") + norm_micro).alias("score_micro")
-        )
-    )
-    order = (F.col("score_micro").desc(), F.col("id"))
-    salt = (hash_bucket(F.col("id").cast("string"), "swarm-lm") % n_salts).cast("int")
-    w1 = Window.partitionBy("query_id", "salt").orderBy(*order)
-    survivors = (
-        scored.withColumn("salt", salt)
-        .withColumn("rk", F.row_number().over(w1))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "id", "score_micro", "rank")
-        .orderBy("query_id", "rank")
+    return _rank_all(
+        _LmScorer(mu), docs, queries, k, text_col, id_col, query_id_col,
+        query_text_col, n_salts, broadcast_max_queries, postings, cf_stats, totals,
     )
 
 
@@ -1053,10 +1084,11 @@ def lm_pruned(
     min_prune_queries: int | None = 2000,
 ) -> DataFrame:
     """:func:`lm_topk` with MaxScore-style pruning — same output, bit
-    for bit, via the three passes of :func:`bm25_pruned` (seed θ from
-    the top-upper-bound term's exactly-scored postings, ub-ascending
-    non-essential prefix, verify candidates holding ≥ 1 essential
-    term). Two LM-specific deltas:
+    for bit, via :func:`bm25_pruned`'s gate ladder (θ seeded from the
+    exactly-scored postings of each query's top ``seed_terms``
+    upper-bound terms, ub-ascending non-essential prefix, verify
+    candidates holding ≥ 1 essential term), with ``cf`` as the volume
+    statistic. Two LM-specific deltas:
 
     - per-term ub = qtf·round(1e6·ln(1 + max_tf·|C|/(µ·cf))) + 1 — the
       contribution at the term's max tf (monotone in tf; +1 headroom);
@@ -1069,309 +1101,17 @@ def lm_pruned(
       θ−1 < θ; seed θ scores include each seed doc's own normalizer,
       so θ lower-bounds the true k-th score.
 
-    ``bounds`` is the same (tok, max_tf) max-monoid statistic BM25
-    pruning uses (one bounds table serves both rankers, like the
-    shared postings). The two adaptive effectiveness gates (see
-    :func:`bm25_pruned`) apply here too, with ``cf`` as the volume
-    statistic — identical results on every path. ``min_prune_queries``
-    is the same ad-hoc batch-size pre-gate as :func:`bm25_pruned`'s
-    (measured crossover; persisted-index entries never pre-gated),
-    routing small ad-hoc batches to :func:`lm_topk` before any gate
+    ``bounds`` is the same (tok, max_tf) statistic BM25 pruning uses
+    (one bounds table serves both rankers). ``min_prune_queries``
+    routes small ad-hoc batches to :func:`lm_topk` before any gate
     action runs."""
-    from .similarity import _probe_is_small
-
     if k < 1 or mu <= 0:
         raise ValueError(f"need k >= 1 and mu > 0; got {k}, {mu}")
-    if seed_terms < 1:
-        raise ValueError(f"seed_terms must be >= 1, got {seed_terms}")
-    pre_qn = None
-    if postings is None and min_prune_queries is not None and min_prune_queries > 0:
-        cap = max(min_prune_queries, broadcast_max_queries or 0)
-        pre_qn = queries.limit(cap + 1).count()
-        if pre_qn < min_prune_queries:
-            return lm_topk(
-                docs,
-                queries,
-                k=k,
-                mu=mu,
-                text_col=text_col,
-                id_col=id_col,
-                query_id_col=query_id_col,
-                query_text_col=query_text_col,
-                n_salts=n_salts,
-                broadcast_max_queries=broadcast_max_queries,
-                cf_stats=cf_stats,
-                totals=totals,
-            )
-    small = (
-        broadcast_max_queries is not None and pre_qn <= broadcast_max_queries
-        if pre_qn is not None
-        else _probe_is_small(queries, broadcast_max_queries)
-    )
-    if postings is None:
-        if docs is None:
-            raise ValueError("need docs or a persisted postings frame")
-        # ad-hoc entry: cache the postings so the gate actions + min_dl
-        # scan + final plan materialize them once, and restrict them to
-        # the batch vocabulary first — see bm25_pruned. The restricted
-        # min_dl below is min dl over docs holding >= 1 batch term — a
-        # TIGHTER normalizer bound that still covers every candidate
-        # (candidates hold a batch term by construction).
-        qvocab = queries.select(
-            F.explode(tokens_col(query_text_col)).alias("tok")
-        ).distinct()
-        post = bm25_postings(
-            docs, text_col, id_col, vocab=qvocab if small else None
-        ).persist()
-        if totals is None:
-            totals = bm25_totals(docs, text_col, id_col)
-    else:
-        post = postings
-        if totals is None:
-            totals = post.select("id", "dl").distinct().agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("dl"), F.lit(0)).alias("tot_tokens"),
-            )
-    if cf_stats is None:
-        cf_stats = lm_cf_stats(post)
-    if bounds is None:
-        bounds = bm25_term_bounds(post)
-    tot = totals.agg(
-        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt"),
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
-    ).head()
-    tt, n_docs = int(tot["tt"]), int(tot["n"])
-    if tt == 0:
-        raise ValueError("corpus has no tokens")
-
-    def _b(frame):
-        return F.broadcast(frame) if small else frame
-
-    qtoks = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(tokens_col(query_text_col)).alias("tok"),
-    )
-    # metadata-sized query-side frames, re-read by every serial gate
-    # action below — persist once, see bm25_pruned (r14, guide §5)
-    qterms = qtoks.groupBy("query_id", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("qtf")
-    ).persist()
-    qlen = qtoks.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("qlen")
-    ).persist()
-    qcf = qterms.join(cf_stats, "tok").select(
-        "query_id", "tok", "qtf", "cf"
-    ).persist()
-
-    def _ln_micro(tf_col):
-        return F.round(
-            F.lit(1_000_000.0)
-            * F.log(
-                F.lit(1.0) + (tf_col * F.lit(float(tt))) / (F.lit(mu) * F.col("cf"))
-            )
-        ).cast("long")
-
-    # LEFT join with an infinite-ub fallback for terms missing from a
-    # partial bounds table — see bm25_pruned: incomplete bounds degrade
-    # pruning, never correctness
-    qub = qcf.join(bounds, "tok", "left").select(
-        "query_id",
-        "tok",
-        "cf",
-        F.when(F.col("max_tf").isNull(), F.lit(1 << 52))
-        .otherwise(F.col("qtf") * _ln_micro(F.col("max_tf")) + 1)
-        .alias("ub"),
-    ).persist()
-    term_micro = F.col("qtf") * _ln_micro(F.col("tf"))
-    norm_of = lambda dl_col: F.round(  # noqa: E731 — shared exact expression
-        F.lit(1_000_000.0) * F.log(F.lit(mu) / (dl_col + F.lit(mu)))
-    ).cast("long")
-    qcf_b, qlen_b = _b(qcf), _b(qlen)
-    # batch-vocab scan restriction — see bm25_pruned: the by-id join
-    # must never fan candidates out by full doc posting lists
-    qtok_b = _b(qcf.select("tok").distinct())
-
-    def _exact_scores(pairs: DataFrame) -> DataFrame:
-        p = (
-            post.join(qtok_b, "tok")
-            .join(pairs, "id")
-            .join(qcf_b, ["query_id", "tok"])
-            .select("query_id", "id", "dl", term_micro.alias("__t"))
-            .groupBy("query_id", "id")
-            .agg(F.sum("__t").alias("__s"), F.max("dl").alias("dl"))
-        )
-        return p.join(qlen_b, "query_id").select(
-            "query_id",
-            "id",
-            (F.col("__s") + F.col("qlen") * norm_of(F.col("dl"))).alias(
-                "score_micro"
-            ),
-        )
-
-    def _exhaustive():
-        p = (
-            post.join(qcf_b, "tok")
-            .select("query_id", "id", "dl", term_micro.alias("__t"))
-            .groupBy("query_id", "id")
-            .agg(F.sum("__t").alias("__s"), F.max("dl").alias("dl"))
-        )
-        scored = p.join(qlen_b, "query_id").select(
-            "query_id",
-            "id",
-            (F.col("__s") + F.col("qlen") * norm_of(F.col("dl"))).alias(
-                "score_micro"
-            ),
-        )
-        return _two_phase_topk(scored, k, n_salts, "swarm-lm")
-
-    # top-`seed_terms` seeding — see bm25_pruned: single-term seeds
-    # starve theta on rare-tail vocabularies; correctness is seeding-
-    # independent (exclusion bound, not seed membership). The seed
-    # eligibility cap uses cf (this index shape's stored statistic);
-    # cf >= df, so it errs toward the exhaustive route — never toward
-    # an expensive seed.
-    seed_cf_cap = max(k, n_docs // 8)
-    wseed = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("tok"))
-    seed_term = (
-        qub.where(F.col("cf") <= F.lit(seed_cf_cap))
-        .withColumn("__r", F.row_number().over(wseed))
-        .where(F.col("__r") <= seed_terms)
-        .select("query_id", "tok")
-        .persist()
-    )
-
-    # adaptive effectiveness gate #1 — see bm25_pruned (cf is the
-    # posting-volume statistic this index shape stores; cf >= df, so
-    # the fan-out term overestimates and falls back conservatively)
-    # slice_rows rides the vol gate's action — see bm25_pruned
-    slice_agg = (
-        qterms.select("tok")
-        .distinct()
-        .join(cf_stats, "tok")
-        .agg(F.coalesce(F.sum("cf"), F.lit(0)).alias("slice_rows"))
-    )
-    vol = (
-        qterms.join(cf_stats, "tok")
-        .join(seed_term.withColumn("__s", F.lit(1)), ["query_id", "tok"], "left")
-        .agg(
-            F.coalesce(F.sum("cf"), F.lit(0)).alias("v_all"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.col("cf")).otherwise(0)),
-                F.lit(0),
-            ).alias("v_seed"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.lit(1)).otherwise(0)),
-                F.lit(0),
-            ).alias("n_seed"),
-        )
-        .crossJoin(slice_agg)
-        .head()
-    )
-    # empty seed set (every term over the cf cap) — see bm25_pruned
-    if int(vol["n_seed"]) == 0:
-        return _exhaustive()
-    v_all = int(vol["v_all"])
-    slice_rows = int(vol["slice_rows"])
-    v_seed = int(vol["v_seed"])
-    if (
-        v_all == 0
-        or n_docs == 0
-        or v_seed * 3 > v_all
-        or v_seed * (float(slice_rows) / float(n_docs)) * 3.0 > float(v_all)
-    ):
-        return _exhaustive()
-
-    seed_pairs = post.join(_b(seed_term), "tok").select("query_id", "id").distinct()
-    # pre-route before exact seed scoring — see bm25_pruned: theta
-    # exists iff >= k seed docs, so dropping under-k queries' pairs
-    # here changes nothing but the scoring volume
-    elig_q = (
-        seed_pairs.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("__nsd"))
-        .where(F.col("__nsd") >= k)
-        .select("query_id")
-    )
-    # routing-volume gate BEFORE seed scoring — see bm25_pruned: the
-    # theta-defined set IS elig_q, so its volume share routes the whole
-    # batch exhaustive without paying the seed-scoring job; the
-    # <= |Q|-row frame doubles as the local eligible set
-    elig_vol = (
-        qterms.join(cf_stats, "tok")
-        .join(_b(elig_q), "query_id")
-        .groupBy("query_id")
-        .agg(F.coalesce(F.sum("cf"), F.lit(0)).alias("v_q"))
-    )
-    elig_rows = elig_vol.collect()
-    v_def = sum(int(r["v_q"]) for r in elig_rows)
-    if v_def == 0 or v_def * 8 < v_all:
-        return _exhaustive()
-    elig_loc = queries.sparkSession.createDataFrame(
-        elig_rows, elig_vol.schema
-    ).select("query_id")
-    seed_pairs = seed_pairs.join(F.broadcast(elig_loc), "query_id")
-    # materialized once, driver-local — see bm25_pruned
-    theta = _materialize_small(
-        _kth_score(_exact_scores(seed_pairs), k, n_salts, "swarm-lmp")
-    )
-
-    # the corpus-wide normalizer max, by the same expression the real
-    # normalizer uses at dl = min_dl — bound is exact, no epsilon.
-    # (min_dl is one postings aggregation; computed HERE, after the
-    # early exits, so the saturated/starved fallbacks never pay the
-    # scan — it showed up as pure overhead on the saturated probe.)
-    # Per-query routing as in bm25_pruned: theta-null queries take the
-    # exhaustive plan shape on their slice instead of forcing every
-    # term essential (which would push all-pairs volume through the
-    # candidate-verify join).
-    min_dl = int(
-        post.agg(F.coalesce(F.min("dl"), F.lit(0)).alias("m")).head()["m"]
-    )
-    qnorm_ub = F.col("qlen") * norm_of(F.lit(min_dl))
-    wcum = (
-        Window.partitionBy("query_id")
-        .orderBy(F.col("ub").asc(), F.col("tok"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ess = (
-        qub.withColumn("cum", F.sum("ub").over(wcum))
-        .join(qlen_b, "query_id")
-        .join(_b(theta), "query_id")
-        .where(F.col("cum") >= F.col("theta") - qnorm_ub)
-        .select("query_id", "tok")
-    )
-    # adaptive gate #2 over the theta-DEFINED slice — see bm25_pruned
-    # (v_def is already on the driver from the pre-theta routing gate)
-    theta_q = theta.select("query_id")
-    ev = (
-        qterms.join(theta_q, "query_id")
-        .join(cf_stats, "tok")
-        .join(ess.withColumn("__e", F.lit(1)), ["query_id", "tok"], "left")
-        .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("__e").isNotNull(), F.col("cf")).otherwise(0)),
-                F.lit(0),
-            ).alias("v_ess"),
-        )
-        .head()
-    )
-    if int(ev["v_ess"]) * 3 > 2 * v_def:
-        return _exhaustive()
-
-    cand = post.join(_b(ess), "tok").select("query_id", "id").distinct()
-    pruned = _exact_scores(cand)
-    exh_pairs = (
-        post.join(_b(qcf.join(theta_q, "query_id", "left_anti")), "tok")
-        .select("query_id", "id", "dl", term_micro.alias("__t"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("__t").alias("__s"), F.max("dl").alias("dl"))
-    )
-    exhaustive_slice = exh_pairs.join(qlen_b, "query_id").select(
-        "query_id",
-        "id",
-        (F.col("__s") + F.col("qlen") * norm_of(F.col("dl"))).alias("score_micro"),
-    )
-    return _two_phase_topk(
-        pruned.unionByName(exhaustive_slice), k, n_salts, "swarm-lm"
+    return _maxscore_topk(
+        _LmScorer(mu),
+        docs, queries, k, text_col, id_col, query_id_col, query_text_col,
+        n_salts, broadcast_max_queries, postings, cf_stats, totals, bounds,
+        seed_terms, min_prune_queries,
     )
 
 

@@ -137,22 +137,6 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def shingles_expr(ws: Column, n: int) -> Column:
-    """Rolling word n-grams of a token array (SQL-portable shape).
-
-    slice+concat_ws measured 2.3× faster than per-element element_at
-    lookups at typical (≤1k-token) document lengths; for very long
-    documents pre-truncate the token array upstream.
-    """
-    return F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def normalize_text(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Canonical text form for normalized dedup/matching: lowercase,
     punctuation → space, whitespace collapsed + trimmed. Pure codegen

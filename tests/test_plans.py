@@ -316,12 +316,12 @@ def _single_partition_violations(plan: str) -> list[str]:
     return bad
 
 
-# Default-run smoke subset: the driver's next 50-query rotation window
-# (same policy as tests/test_oracle.py — the at-risk rows); the full
-# registry sweep stays behind `-m ""` (pytest.ini).
-from swarm_spark.queries import all_queries as _all_queries
+# Default-run smoke subset: the at-risk rows (tests/_smoke.py, same
+# policy as tests/test_oracle.py); the full registry sweep stays behind
+# `-m ""` (pytest.ini).
+from _smoke import smoke_queries  # noqa: E402
 
-_SMOKE = set(list(_all_queries())[:50])
+_SMOKE = smoke_queries()
 
 
 def _sweep_param(name):
@@ -395,6 +395,35 @@ class TestPrunedPathEngages:
             f"{name} routed to the exhaustive plan at sf0.1 — the "
             "bench row no longer measures pruning"
         )
+
+    # the value oracles run at sf0.001, where every pruned-family row
+    # routes exhaustive: only here do the candidate-verify values meet
+    # a check. Two exhaustive twin runs plus four pruned rows at sf0.1
+    # cost ~2 min, so the check runs with the full sweep.
+    TWIN = {
+        "bm25_pruned_kw": "bm25_topk_kw",
+        "bm25_pruned_idx": "bm25_topk_kw",
+        "lm_pruned_idx": "lm_topk_kw",
+        "lm_pruned_kw": "lm_topk_kw",
+    }
+    _twin_rows: dict = {}
+
+    @pytest.mark.sweep
+    @pytest.mark.skipif(not os.path.isdir(SF01), reason="sf0.1 testdata absent")
+    @pytest.mark.parametrize("name", sorted(TWIN))
+    def test_union_path_values_match_exhaustive_twin(self, name, spark):
+        twin = self.TWIN[name]
+        if twin not in self._twin_rows:
+            spark.catalog.clearCache()
+            self._twin_rows[twin] = sorted(
+                map(tuple, ALL[twin][0](spark, self.SF01).collect())
+            )
+        spark.catalog.clearCache()
+        df = ALL[name][0](spark, self.SF01)
+        assert "Union" in df._jdf.queryExecution().executedPlan().toString()
+        got = sorted(map(tuple, df.collect()))
+        spark.catalog.clearCache()
+        assert got == self._twin_rows[twin] and got
 
 
 class TestCcnetIdxServesStoredModel:

@@ -614,12 +614,23 @@ class TestPrunedTopk:
             map(tuple, bm25_topk(docs, qs, k=4).collect())
         )
 
-    def test_fewer_than_k_seed_docs_falls_back_exact(self, spark):
+    @staticmethod
+    def _rankers(name):
+        """(pruned ranker, its exhaustive twin, kwargs passing the
+        persisted df stats the ranker reads — LM folds cf from the
+        postings)."""
+        from swarm_spark.ops.retrieval import bm25_pruned, lm_pruned, lm_topk
+
+        if name == "bm25_pruned":
+            return bm25_pruned, bm25_topk, lambda s: {"stats": s}
+        return lm_pruned, lm_topk, lambda s: {}
+
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_fewer_than_k_seed_docs_falls_back_exact(self, spark, name):
         # seed term matches 2 docs < k=5: theta is absent, the query is
         # routed to the exhaustive slice, output must still equal the
         # exhaustive ranker
-        from swarm_spark.ops.retrieval import bm25_pruned
-
+        pruned, exhaustive, _ = self._rankers(name)
         docs = _docs(
             spark,
             [
@@ -630,30 +641,31 @@ class TestPrunedTopk:
             ],
         )
         qs = self._queries(spark, [(0, "rare beta")])
-        want = sorted(map(tuple, bm25_topk(docs, qs, k=5).collect()))
-        got = sorted(map(tuple, bm25_pruned(docs, qs, k=5, min_prune_queries=None).collect()))
+        want = sorted(map(tuple, exhaustive(docs, qs, k=5).collect()))
+        got = sorted(map(tuple, pruned(docs, qs, k=5, min_prune_queries=None).collect()))
         assert got == want and len(want) == 4
 
-    def test_tied_scores_keep_id_tiebreak(self, spark):
-        from swarm_spark.ops.retrieval import bm25_pruned
-
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_tied_scores_keep_id_tiebreak(self, spark, name):
+        pruned, exhaustive, _ = self._rankers(name)
         # docs 1..4 are identical -> identical scores; ranks must be
         # id-ascending in both rankers
         docs = _docs(spark, [(i, "same words here") for i in range(1, 5)] + [(9, "other text")])
         qs = self._queries(spark, [(0, "same words")])
-        want = [tuple(r) for r in bm25_topk(docs, qs, k=3).collect()]
-        got = [tuple(r) for r in bm25_pruned(docs, qs, k=3, min_prune_queries=None).collect()]
+        want = [tuple(r) for r in exhaustive(docs, qs, k=3).collect()]
+        got = [tuple(r) for r in pruned(docs, qs, k=3, min_prune_queries=None).collect()]
         assert got == want
         assert [r[1] for r in got] == [1, 2, 3]
 
-    def test_persisted_index_with_bounds(self, spark, corpus, tmp_path):
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_persisted_index_with_bounds(self, spark, corpus, tmp_path, name):
         from swarm_spark.ops.retrieval import (
-            bm25_pruned,
             bm25_term_bounds,
             load_bm25_bounds,
             save_bm25_bounds,
         )
 
+        pruned, exhaustive, stats_kw = self._rankers(name)
         path = str(tmp_path / "idx")
         post = bm25_postings(corpus)
         save_bm25(post, bm25_stats(post), bm25_totals(corpus), path)
@@ -661,16 +673,58 @@ class TestPrunedTopk:
         p, s, t = load_bm25(spark, path)
         bounds = load_bm25_bounds(spark, path)
         qs = self._queries(spark, [(0, "spark join"), (1, "agg window")])
-        want = sorted(map(tuple, bm25_topk(corpus, qs, k=3).collect()))
+        want = sorted(map(tuple, exhaustive(corpus, qs, k=3).collect()))
         got = sorted(
             map(
                 tuple,
-                bm25_pruned(
-                    None, qs, k=3, postings=p, stats=s, totals=t, bounds=bounds
+                pruned(
+                    None, qs, k=3, postings=p, totals=t, bounds=bounds, **stats_kw(s)
                 ).collect(),
             )
         )
         assert got == want and want
+
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_partial_bounds_fall_back_to_infinite_ub(self, spark, tmp_path, name):
+        """A persisted ``bounds`` table that lacks a query term (a
+        partial bounds build) gives that term the 2^52 upper bound:
+        always essential, so pruning degrades and results do not. The
+        missing terms are the rare topic terms whose docs hold the top
+        k, and the batch takes the candidate-verify path (the final
+        plan unions the pruned and theta-null slices): a low fallback
+        bound would push them into the non-essential prefix and drop
+        their docs from the candidates."""
+        from swarm_spark.ops.retrieval import (
+            bm25_term_bounds,
+            load_bm25_bounds,
+            save_bm25_bounds,
+        )
+
+        pruned, exhaustive, stats_kw = self._rankers(name)
+        docs = self._skewed(spark)
+        path = str(tmp_path / "idx")
+        post = bm25_postings(docs)
+        save_bm25(post, bm25_stats(post), bm25_totals(docs), path)
+        save_bm25_bounds(
+            bm25_term_bounds(post).where(~F.col("tok").isin("topic3", "topic11")),
+            path,
+        )
+        p, s, t = load_bm25(spark, path)
+        bounds = load_bm25_bounds(spark, path)
+        assert bounds.where(F.col("tok") == "topic3").count() == 0
+        qs = self._queries(
+            spark,
+            [
+                (0, "the topic3 mid1"),
+                (1, "the common mid1"),
+                (2, "topic11 the mid4 common"),
+                (4, "topic5"),
+            ],
+        )
+        want = sorted(map(tuple, exhaustive(docs, qs, k=4).collect()))
+        probe = pruned(None, qs, k=4, postings=p, totals=t, bounds=bounds, **stats_kw(s))
+        assert sorted(map(tuple, probe.collect())) == want and want
+        assert "Union" in probe._jdf.queryExecution().executedPlan().toString()
 
     def test_bounds_are_max_monoid(self, spark, corpus):
         from swarm_spark.ops.retrieval import bm25_term_bounds
@@ -702,20 +756,21 @@ class TestPrunedTopk:
             map(tuple, lm_pruned(docs, qs, k=5, mu=2000.0, min_prune_queries=None).collect())
         ) == sorted(map(tuple, lm_topk(docs, qs, k=5, mu=2000.0).collect()))
 
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
     def test_pruned_persisted_probe_never_reads_text(
-        self, spark, corpus, tmp_path
+        self, spark, corpus, tmp_path, name
     ):
         """The pruned probe keeps the build-once/probe-many contract:
         with docs=None every pass (seed, theta, essential gate, verify)
         runs off the index tables — the corpus text is absent from the
         executed plan."""
         from swarm_spark.ops.retrieval import (
-            bm25_pruned,
             bm25_term_bounds,
             load_bm25_bounds,
             save_bm25_bounds,
         )
 
+        pruned, exhaustive, stats_kw = self._rankers(name)
         post = bm25_postings(corpus)
         save_bm25(post, bm25_stats(post), bm25_totals(corpus), str(tmp_path / "ix"))
         save_bm25_bounds(bm25_term_bounds(post), str(tmp_path / "ix"))
@@ -724,11 +779,12 @@ class TestPrunedTopk:
         queries = _docs(spark, [(9, "broadcast window"), (8, "spark agg")]).select(
             F.col("doc_id").alias("query_id"), "text"
         )
-        probe = bm25_pruned(
-            None, queries, k=3, postings=lpost, stats=lstats, totals=ltot, bounds=lb
+        probe = pruned(
+            None, queries, k=3, postings=lpost, totals=ltot, bounds=lb,
+            **stats_kw(lstats),
         )
         got = sorted(map(tuple, probe.collect()))
-        want = sorted(map(tuple, bm25_topk(corpus, queries, k=3).collect()))
+        want = sorted(map(tuple, exhaustive(corpus, queries, k=3).collect()))
         assert got == want
         final = (
             probe._jdf.queryExecution()
@@ -741,6 +797,49 @@ class TestPrunedTopk:
         # corpus text is not in the plan at all
         assert "documents" not in final
         assert final.count("Scan parquet") <= 8
+
+    # Spark jobs on the skew fixture, measured with the two rankers'
+    # former separate ladders (local[4], 4 shuffle partitions): (build,
+    # most seen for the collect). Building runs the ladder's serial gate
+    # actions, so an added gate action shows up in the build count,
+    # which is deterministic; the collect varies by one job between
+    # runs under adaptive execution. BM25's ladder is pinned exactly,
+    # LM's may only get cheaper.
+    LADDER_JOBS = {"bm25_pruned": (56, 15), "lm_pruned": (62, 20)}
+
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_ladder_jobs_pinned(self, spark, name):
+        pruned, _, _ = self._rankers(name)
+        docs = self._skewed(spark)
+        qs = self._queries(
+            spark,
+            [
+                (0, "the topic3 mid1"),
+                (1, "the common the"),
+                (2, "topic11 the mid4 common"),
+                (3, "nosuchterm anywhere"),
+                (4, "topic5"),
+            ],
+        )
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"ladder-jobs-{name}"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            df = pruned(docs, qs, k=4, min_prune_queries=None)
+            build = len(tracker.getJobIdsForGroup(group))
+            df.collect()
+            collect = len(tracker.getJobIdsForGroup(group)) - build
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            spark.catalog.clearCache()
+        pinned_build, pinned_collect = self.LADDER_JOBS[name]
+        if name == "bm25_pruned":
+            assert build == pinned_build
+        else:
+            assert build <= pinned_build
+        assert collect <= pinned_collect
 
     def test_bad_args(self, spark, corpus):
         from swarm_spark.ops.retrieval import bm25_pruned, lm_pruned
