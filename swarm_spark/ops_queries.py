@@ -14,8 +14,8 @@ contract shared by both sides:
 
 Session-cache contract (r14 VERDICT #6): a few builders persist()
 reused metadata-sized frames in-plan (`_kw_corpus`, the pruned
-rankers' gate frames via ops/retrieval.py, `q_similarity_tfidf_pairs`'
-gram corpus). The bench and the plan tests clear the session cache
+rankers' gate frames via ops/retrieval.py; `q_similarity_tfidf_pairs`
+persists nothing). The bench and the plan tests clear the session cache
 between samples; a LONG-LIVED embedding session that calls these
 builders repeatedly must do the same (`spark.catalog.clearCache()`
 between waves) or the CacheManager accumulates entries until session
@@ -4348,16 +4348,14 @@ def q_similarity_tfidf_pairs(spark, sf):
     every pair AND score value-oracles."""
     from .ops.allpairs import tfidf_cosine_pairs
 
-    # Materialization barrier for the gram corpus (r14 pattern, guide
-    # §4.1/§5 — the `_kw_corpus` precedent): the gram text is built by
-    # an interpreted higher-order `transform` lambda, and downstream
-    # consumers re-evaluate it — tfidf_postings' sizing count() is a
-    # separate action, and its token explode re-evaluates the
-    # generator input per OUTPUT row. repartition spreads the
-    # one-row-group scan so the one evaluation runs at full width
-    # (§2.5); the bench clears the session cache between samples, so
-    # every sample recomputes from parquet. Long-lived embedders own
-    # cache release (see the module docstring contract).
+    # The gram corpus is NOT materialized: nothing here persists or
+    # checkpoints it. The gram text is built by an interpreted
+    # higher-order `transform` lambda, and tfidf_postings' sizing
+    # count() is a separate job, so the lambda runs at least twice per
+    # build; inside the pairs job only exchange reuse dedupes its
+    # branches. repartition is not a barrier either: it only spreads
+    # the one-row-group scan so each evaluation runs at full width
+    # (§2.5). Every sample recomputes from parquet.
     par = spark.sparkContext.defaultParallelism
     grams = (
         _docs(spark, sf)
@@ -5467,12 +5465,14 @@ def q_corpus_curate_ccnet(spark, sf):
     # grouped count MODEL feeds 2·order−1 = 5 scoring joins (the train
     # aggregation re-ran per join branch); and the tercile-bucket step
     # consumes SCORED twice (threshold histogram + label join). All
-    # three are persisted — model/scored are vocab- and doc-count-
-    # sized; docs is the wave being curated, which production stages
-    # between passes anyway (the CLI's localCheckpoint precedent). The
+    # three are staged with eager localCheckpoint — model/scored are
+    # vocab- and doc-count-sized; docs is the wave being curated, which
+    # production stages between passes anyway (the CLI's
+    # localCheckpoint precedent). The blocks never register in the
+    # CacheManager, so spark.catalog.clearCache() cannot free them; the
+    # context cleaner does once the returned frame is dropped. The
     # repartition spreads the one-row-group scan so the train/score
-    # stages run at full width instead of single-task (§2.5); the
-    # bench clears the cache between samples.
+    # stages run at full width instead of single-task (§2.5).
     par = spark.sparkContext.defaultParallelism
     docs = (
         _docs(spark, sf)

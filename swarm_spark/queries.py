@@ -1551,366 +1551,11 @@ CORE: dict[str, tuple[Callable, str | None]] = {
 }
 
 
-def _row_is_green(row) -> bool:
-    """A driver row counts as verified only if it raised no error and
-    none of its match flags is False. Rows-only checks (queries with no
-    SQL oracle) legitimately omit or null the hash/schema flags — a
-    missing flag is not a failure, but an explicit ``False`` or a
-    non-null ``err`` is."""
-    if not isinstance(row, dict):
-        return False
-    if row.get("err") is not None:
-        return False
-    return all(
-        row.get(k) is not False for k in ("rows_match", "schema_match", "hash_match")
-    )
-
-
-def _last_green_round(root=None) -> dict[str, int]:
-    """Map query name -> most recent round with a GREEN driver
-    CORRECTNESS row.
-
-    Reads ``CORRECTNESS_r*.json`` files at ``root`` (default: the repo
-    root, where the correctness driver writes them each round). Queries
-    absent from every file have never been driver-oracled. A red row
-    (``err`` set, or any match flag False) deliberately does NOT count
-    as checked: rotation keys on the last *green* round, so a query
-    that failed its oracle re-enters the next round's driver window
-    immediately instead of being deferred as if it had passed.
-    Missing/corrupt files are ignored — with no history the registry
-    keeps registration order.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(root) if root is not None else Path(__file__).resolve().parent.parent
-    last: dict[str, int] = {}
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(p.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if _row_is_green(row):
-                last[name] = max(last.get(name, -1), rnd)
-    return last
-
-
-# package prefix whose modules/objects count toward a query's source
-# fingerprint (module-level so tests can aim the walker at a fixture
-# package)
-_FP_PKG = "swarm_spark"
-
-# Version of the fingerprint ALGORITHM itself, recorded per ledger
-# entry. Bumping it (e.g. the r9 bytecode->AST walker rewrite) updates
-# every stored fp WITHOUT touching `since`: an algorithm upgrade is not
-# a source change, so it must not masquerade as one and stampede the
-# driver-window rotation (the r8 VERDICT process finding: the
-# IMPORT_NAME walker fix re-windowed 83 queries at once).
-_FP_ALGO_VERSION = 2
-
-
-def _imported_objects(src: str, owner_module: str) -> list:
-    """Objects brought in by import STATEMENTS anywhere in ``src`` (a
-    function's source text) — resolved from the AST, because a
-    function-local ``from .ops.x import helper`` binds a LOCAL variable
-    that the ``__globals__`` walk in :func:`_source_fingerprint` can
-    never see (the dominant import pattern in this registry). AST, not
-    bytecode: ``ast.ImportFrom`` carries level/module/names explicitly,
-    where the old LOAD_CONST scan was CPython-bytecode-version-fragile
-    (ADVICE r8: 3.14's LOAD_SMALL_INT would silently drop relative
-    imports). For ``from M import a, b`` the imported attributes are
-    returned (submodules resolve too); for a plain ``import M`` or a
-    ``from M import *`` the module object itself is (hashed whole-file —
-    coarse on purpose). Only ``_FP_PKG`` modules resolve; anything else
-    returns nothing. Nested defs are covered by the same parse."""
-    import ast
-    import importlib
-    import textwrap
-
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:
-        return []
-
-    def in_pkg(mod: str) -> bool:
-        return mod == _FP_PKG or mod.startswith(_FP_PKG + ".")
-
-    def load(mod: str):
-        try:
-            return importlib.import_module(mod)
-        except ImportError:
-            return None
-
-    out: list = []
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for alias in node.names:
-                if in_pkg(alias.name):
-                    m = load(alias.name)
-                    if m is not None:
-                        out.append(m)
-        elif isinstance(node, ast.ImportFrom):
-            if node.level:  # relative: strip `level` trailing components
-                parts = owner_module.split(".")
-                if len(parts) < node.level:
-                    continue
-                base = ".".join(parts[: -node.level]) or parts[0]
-                full = f"{base}.{node.module}" if node.module else base
-            else:
-                full = node.module or ""
-            if not in_pkg(full):
-                continue
-            mod = load(full)
-            if mod is None:
-                continue
-            for alias in node.names:
-                if alias.name == "*":
-                    out.append(mod)
-                    continue
-                attr = getattr(mod, alias.name, None)
-                if attr is None:  # `from pkg import submod` not yet bound
-                    attr = load(f"{full}.{alias.name}")
-                if attr is not None:
-                    out.append(attr)
-    return out
-
-
-def _source_fingerprint(fn: Callable, sql: str | None) -> str:
-    """Hex digest of a query's *code identity*: the source text of the
-    query function plus every ``swarm_spark`` function/class/module it
-    transitively references, plus its oracle SQL. Two queries whose
-    implementation (at any depth inside the package) or oracle changed
-    get different digests; edits outside the package (tests, docs) do
-    not perturb it. Pieces are sorted before hashing so traversal order
-    can't flip the digest between processes.
-    """
-    import functools
-    import hashlib
-    import inspect
-    import types
-    from pathlib import Path
-
-    pieces: list[str] = [sql or ""]
-    seen: set[int] = set()
-    stack: list[object] = [fn]
-    root_id = id(fn)
-    while stack:
-        obj = stack.pop()
-        if id(obj) in seen:
-            continue
-        seen.add(id(obj))
-        if isinstance(obj, functools.partial):
-            stack.append(obj.func)
-            continue
-        if isinstance(obj, types.ModuleType):
-            name = getattr(obj, "__name__", "")
-            f = getattr(obj, "__file__", None)
-            if name.startswith(_FP_PKG) and f:
-                # module referenced as an object: hash the whole file
-                # (coarse on purpose — any edit inside it re-windows)
-                try:
-                    pieces.append(Path(f).read_text())
-                except OSError:
-                    pieces.append(name)
-            continue
-        mod = getattr(obj, "__module__", None) or ""
-        in_pkg = mod == _FP_PKG or mod.startswith(_FP_PKG + ".")
-        if not (in_pkg or id(obj) == root_id):
-            continue
-        if isinstance(obj, type):
-            try:
-                pieces.append(inspect.getsource(obj))
-            except (OSError, TypeError):
-                pieces.append(obj.__qualname__)
-            stack.extend(
-                v for v in vars(obj).values() if isinstance(v, types.FunctionType)
-            )
-        elif isinstance(obj, types.FunctionType):
-            try:
-                src = inspect.getsource(obj)
-            except (OSError, TypeError):
-                src = None
-            pieces.append(src if src is not None else obj.__qualname__)
-            if src is not None:
-                # function-local `from .ops.x import f` binds a local —
-                # invisible to __globals__; resolve from the AST (one
-                # parse covers nested defs too; ADVICE r7/r8)
-                stack.extend(_imported_objects(src, mod))
-            g = obj.__globals__
-            codes = [obj.__code__]
-            while codes:
-                code = codes.pop()
-                codes.extend(c for c in code.co_consts if isinstance(c, types.CodeType))
-                stack.extend(g[n] for n in code.co_names if n in g)
-    pieces.sort()
-    return hashlib.sha256("\x00".join(pieces).encode()).hexdigest()
-
-
-def _change_rounds(
-    registry: dict[str, tuple[Callable, str | None]], root=None
-) -> dict[str, int]:
-    """Map query name -> the round since which its CURRENT source
-    fingerprint has been in effect.
-
-    Backed by a committed ledger (``QUERY_HASHES.json`` at repo root):
-    when a query's fingerprint differs from the ledger's, the ledger is
-    rewritten with ``since = last completed driver round + 1`` (i.e. the
-    round now in progress). The rotation compares ``since`` against the
-    query's last GREEN driver round — a green row OLDER than the code it
-    supposedly verified no longer defers the query out of the window
-    (the r6 VERDICT hole: ``text_strip_segments``/``pack_bins`` changed
-    in r5 and coasted on r4 rows).
-
-    Each entry also records the fingerprint ALGORITHM version
-    (``algo``). When the stored version differs from
-    ``_FP_ALGO_VERSION``, old and new fps are incomparable, so the fp is
-    recomputed and stored but ``since`` is KEPT: an algorithm upgrade is
-    a one-field version bump, not 127 simultaneous source changes (the
-    r8 stampede). The one-time blind spot — a source change landing in
-    the very same commit as an algo bump is absorbed silently — is why
-    algo bumps must be committed (migrating the ledger) BEFORE any
-    query-source edits in the same round.
-
-    Each change also records the PREVIOUS (fp, since) pair. If the
-    fingerprint later flips back to exactly that previous value while
-    still in the round that bumped it (an edit made and reverted, or a
-    mid-edit import glitch during an interactive session), the original
-    ``since`` is restored: an A→B→A flap is not a source change, and
-    must not consume a driver-window slot (the r9 session observed 51
-    such spurious restamps from running tests against half-edited
-    trees).
-
-    The ledger write is best-effort; on a read-only checkout the
-    in-memory result is still correct for this process.
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    root = Path(root) if root is not None else Path(__file__).resolve().parent.parent
-    cur_round = 1
-    for p in root.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if m:
-            cur_round = max(cur_round, int(m.group(1)) + 1)
-    ledger_path = root / "QUERY_HASHES.json"
-    try:
-        ledger = json.loads(ledger_path.read_text())
-        if not isinstance(ledger, dict):
-            ledger = {}
-    except (OSError, ValueError):
-        ledger = {}
-    dirty = False
-    out: dict[str, int] = {}
-    for name, (fn, sql) in registry.items():
-        fp = _source_fingerprint(fn, sql)
-        ent = ledger.get(name)
-        if not isinstance(ent, dict):
-            ent = {"fp": fp, "since": cur_round, "algo": _FP_ALGO_VERSION}
-            ledger[name] = ent
-            dirty = True
-        elif int(ent.get("algo", 1)) != _FP_ALGO_VERSION:
-            # algorithm upgrade: fps are incomparable across versions —
-            # restamp the fp under the new algo, KEEP `since`
-            ent = {
-                "fp": fp,
-                "since": int(ent.get("since", cur_round)),
-                "algo": _FP_ALGO_VERSION,
-            }
-            ledger[name] = ent
-            dirty = True
-        elif ent.get("fp") != fp:
-            prev = ent.get("prev")
-            if (
-                isinstance(prev, dict)
-                and prev.get("fp") == fp
-                and int(ent.get("since", 0)) == cur_round
-            ):
-                # A->B->A flap within the round in progress (an edit
-                # made and reverted, or a mid-edit import glitch): the
-                # source is back to the exact state its last committed
-                # row verified, so restore the original `since` — a
-                # transient must not masquerade as a this-round change
-                # and consume a driver-window slot
-                ent = {
-                    "fp": fp,
-                    "since": int(prev.get("since", cur_round)),
-                    "algo": _FP_ALGO_VERSION,
-                }
-            else:
-                ent = {
-                    "fp": fp,
-                    "since": cur_round,
-                    "algo": _FP_ALGO_VERSION,
-                    "prev": {
-                        "fp": ent.get("fp"),
-                        "since": int(ent.get("since", cur_round)),
-                    },
-                }
-            ledger[name] = ent
-            dirty = True
-        out[name] = int(ent.get("since", cur_round))
-    if dirty:
-        try:
-            ledger_path.write_text(json.dumps(ledger, indent=1, sort_keys=True) + "\n")
-        except OSError:
-            pass
-    return out
-
-
-def _rotation_key(name: str, last: dict[str, int], since: dict[str, int], reg_index: dict[str, int]):
-    """Sort key for the driver window: never-driver-checked queries
-    first, then queries whose source changed AFTER their last green row
-    (their green row verifies stale code), then verified queries by
-    last-green round ascending. Registration order breaks ties."""
-    lg = last.get(name, -1)
-    if lg < 0:
-        pri = 0
-    elif since.get(name, 0) > lg:
-        pri = 1
-    else:
-        pri = 2
-    return (pri, lg, reg_index[name])
-
-
 def all_queries() -> dict[str, tuple[Callable, str | None]]:
-    """CORE ingestion-dataflow + LLM-pipeline + classical operators.
-
-    Driver-window rotation: the correctness driver oracles only the
-    FIRST 50 registry entries per round, in iteration order. To
-    guarantee every query gets a driver row at least every ceil(N/50)
-    rounds, entries are ordered never-checked first, then
-    source-changed-since-last-green (a green row predating the current
-    implementation verifies nothing), then by last driver-checked-GREEN
-    round ascending. A query whose latest row was red (oracle mismatch
-    or error) sorts by its previous green round, so known failures
-    re-enter the window immediately. Ties keep registration order, so
-    the ordering is deterministic within a round.
-    """
+    """CORE ingestion-dataflow + LLM-pipeline + classical operators, in
+    registration order (the driver-window order lives in
+    ``__spark_entry__.py``)."""
     from .classical_queries import CLASSICAL
     from .ops_queries import OPS
 
-    out = dict(CORE)
-    out.update(OPS)
-    out.update(CLASSICAL)
-    # memoized: the driver calls queries() and oracle_sql() separately
-    # and writes CORRECTNESS_r{N}.json during its run — the ordering
-    # must not shift between those calls within one process
-    global _ORDER_CACHE
-    if _ORDER_CACHE is None or set(_ORDER_CACHE) != set(out):
-        last = _last_green_round()
-        since = _change_rounds(out)
-        reg_index = {name: i for i, name in enumerate(out)}
-        _ORDER_CACHE = sorted(out, key=lambda n: _rotation_key(n, last, since, reg_index))
-    return {name: out[name] for name in _ORDER_CACHE}
-
-
-_ORDER_CACHE: list[str] | None = None
+    return {**CORE, **OPS, **CLASSICAL}

@@ -48,17 +48,14 @@ def rows_to_multiset(cols, rows):
 ORACLE = entry_mod.oracle_sql()
 QUERIES = entry_mod.queries()
 
-# Default-run smoke subset for the two EXPENSIVE per-query tests
-# (Spark execution + value/hash compare): the driver's next 50-query
-# rotation window (never-checked, then stalest-green queries, in
-# swarm_spark.queries.all_queries order) plus every source-changed
-# query (tests/_smoke.py), so the fast suite always covers the at-risk
-# rows; the full registry stays behind `-m ""` (pytest.ini). The two
-# DuckDB-only lints below are plan-time cheap and keep full coverage in
-# the default run.
-from _smoke import smoke_queries  # noqa: E402
+# Default-run subset for the two EXPENSIVE per-query tests (Spark
+# execution + value/hash compare): the committed set in tests/_smoke.py,
+# so every checkout selects the same tests; the full registry stays
+# behind `-m ""` (pytest.ini). The two DuckDB-only lints below are
+# plan-time cheap and keep full coverage in the default run.
+from _smoke import SMOKE  # noqa: E402
 
-_SMOKE = smoke_queries() & set(ORACLE)
+_SMOKE = SMOKE & set(ORACLE)
 
 
 def _sweep_param(name):

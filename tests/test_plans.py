@@ -316,12 +316,10 @@ def _single_partition_violations(plan: str) -> list[str]:
     return bad
 
 
-# Default-run smoke subset: the at-risk rows (tests/_smoke.py, same
-# policy as tests/test_oracle.py); the full registry sweep stays behind
+# Default-run subset: the committed set in tests/_smoke.py (shared
+# with tests/test_oracle.py); the full registry sweep stays behind
 # `-m ""` (pytest.ini).
-from _smoke import smoke_queries  # noqa: E402
-
-_SMOKE = smoke_queries()
+from _smoke import SMOKE as _SMOKE  # noqa: E402
 
 
 def _sweep_param(name):

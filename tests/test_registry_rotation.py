@@ -1,26 +1,34 @@
 """Driver-window rotation: the correctness driver oracles only the
-first 50 registry entries, so ``all_queries()`` must order queries by
-last-driver-checked-GREEN round ascending (never-checked first, and a
-query whose latest row was RED re-enters the window immediately).
-These tests pin that policy against the CORRECTNESS_r*.json history at
-repo root.
+first 50 entries of ``__spark_entry__.queries()``, so the driver
+contract orders queries by last-driver-checked-GREEN round ascending
+(never-checked first, and a query whose latest row was RED re-enters
+the window immediately). These tests pin that policy against the
+CORRECTNESS_r*.json history at repo root, and pin the source
+fingerprint behind ``since`` (``scripts/query_ledger.py``).
 """
 
 from __future__ import annotations
 
 import json
+import sys
 from pathlib import Path
 
-from swarm_spark.queries import (
+from __spark_entry__ import (
     _change_rounds,
+    _driver_order,
     _last_green_round,
     _rotation_key,
     _row_is_green,
-    _source_fingerprint,
-    all_queries,
+    queries,
 )
+from swarm_spark.queries import all_queries
 
 ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT / "scripts"))
+
+import query_ledger  # noqa: E402
+from query_ledger import _imported_objects, source_fingerprint  # noqa: E402
+
 DRIVER_WINDOW = 50
 
 
@@ -32,12 +40,14 @@ def _newest_correctness() -> dict | None:
 
 
 def test_ordering_is_deterministic():
-    assert list(all_queries()) == list(all_queries())
+    first = list(queries())
+    _driver_order.cache_clear()
+    assert list(queries()) == first
 
 
 def test_never_checked_queries_lead():
     last = _last_green_round()
-    names = list(all_queries())
+    names = list(queries())
     never = {n for n in names if n not in last}
     if never:
         assert set(names[: len(never)]) == never
@@ -57,17 +67,10 @@ def test_window_holds_the_stalest_queries():
     newest = _newest_correctness()
     if newest is None:
         return
-    from swarm_spark.queries import CORE
-    from swarm_spark.classical_queries import CLASSICAL
-    from swarm_spark.ops_queries import OPS
-
-    registry = dict(CORE)
-    registry.update(OPS)
-    registry.update(CLASSICAL)
     last = _last_green_round()
-    since = _change_rounds(registry)
-    reg_index = {n: i for i, n in enumerate(registry)}
-    names = list(all_queries())
+    since = _change_rounds()
+    reg_index = {n: i for i, n in enumerate(all_queries())}
+    names = list(queries())
     keys = {n: _rotation_key(n, last, since, reg_index) for n in names}
     inside_max = max(keys[n][:2] for n in names[:DRIVER_WINDOW])
     outside_min = (
@@ -106,7 +109,7 @@ def test_every_query_checked_within_ceil_n_over_window_rounds(tmp_path):
     ceil(N/50) consecutive rounds, every registry query must have at
     least one row (the tight pigeonhole bound — equal to "every other
     round" while N <= 100)."""
-    names = list(all_queries())  # current registry, any starting order
+    names = list(queries())  # current registry, any starting order
     span = -(-len(names) // DRIVER_WINDOW)  # ceil(N/window)
 
     def rotate(last: dict[str, int]) -> list[str]:
@@ -140,7 +143,7 @@ def test_red_row_reenters_next_window(tmp_path):
     """A query that FAILS its oracle in round N must be inside the
     first-50 window in round N+1 (the ADVICE r5 finding: a red row
     used to count as 'checked' and rotate out)."""
-    names = list(all_queries())
+    names = list(queries())
     reg = {n: i for i, n in enumerate(names)}
 
     def rotate(last):
@@ -173,7 +176,8 @@ def test_source_changed_query_reenters_window(tmp_path):
     """A query whose implementation changes AFTER its last green driver
     row must sort ahead of still-verified queries (the r6 VERDICT hole:
     text_strip_segments/pack_bins changed in r5 and coasted on r4
-    rows). Simulated against a throwaway ledger root."""
+    rows). Simulated against a throwaway ledger root, restamped with
+    the ledger tool and read back by the rotation."""
 
     def q_v1(spark, sf):
         return "v1"
@@ -185,13 +189,17 @@ def test_source_changed_query_reenters_window(tmp_path):
         return "other"
 
     sql = "SELECT 1 AS n"
-    assert _source_fingerprint(q_v1, sql) == _source_fingerprint(q_v1, sql)
-    assert _source_fingerprint(q_v1, sql) != _source_fingerprint(q_v2, sql)
-    assert _source_fingerprint(q_v1, sql) != _source_fingerprint(q_v1, "SELECT 2 AS n")
+    assert source_fingerprint(q_v1, sql) == source_fingerprint(q_v1, sql)
+    assert source_fingerprint(q_v1, sql) != source_fingerprint(q_v2, sql)
+    assert source_fingerprint(q_v1, sql) != source_fingerprint(q_v1, "SELECT 2 AS n")
+
+    def restamp(registry):
+        query_ledger.update(query_ledger.fingerprints(registry), tmp_path)
+        return _change_rounds(tmp_path)
 
     reg1 = {"alpha": (q_v1, sql), "beta": (q_other, sql)}
     # initial sighting before any driver round: since=1 for both
-    since = _change_rounds(reg1, tmp_path)
+    since = restamp(reg1)
     assert since == {"alpha": 1, "beta": 1}
     # round 1: both green → last_green=1 >= since=1 → both defer (pri 2)
     (tmp_path / "CORRECTNESS_r01.json").write_text(
@@ -204,26 +212,26 @@ def test_source_changed_query_reenters_window(tmp_path):
     )
     last = _last_green_round(tmp_path)
     reg_index = {"alpha": 0, "beta": 1}
-    k_alpha = _rotation_key("alpha", last, _change_rounds(reg1, tmp_path), reg_index)
+    k_alpha = _rotation_key("alpha", last, restamp(reg1), reg_index)
     assert k_alpha[0] == 2, "green-and-unchanged query should be priority 2"
 
-    # alpha's implementation changes (round 2 in progress): re-fingerprint
+    # alpha's implementation changes (round 2 in progress): restamp
     reg2 = {"alpha": (q_v2, sql), "beta": (q_other, sql)}
-    since2 = _change_rounds(reg2, tmp_path)
+    since2 = restamp(reg2)
     assert since2["alpha"] == 2 and since2["beta"] == 1
     k_alpha = _rotation_key("alpha", last, since2, reg_index)
     k_beta = _rotation_key("beta", last, since2, reg_index)
     assert k_alpha[0] == 1 and k_beta[0] == 2
     assert k_alpha < k_beta, "source-changed query must sort ahead of verified ones"
-    # ledger is stable: same code → same since on every later call
-    assert _change_rounds(reg2, tmp_path)["alpha"] == 2
+    # ledger is stable: same code → same since on every later restamp
+    assert restamp(reg2)["alpha"] == 2
 
     # round 2's driver row lands green → alpha is verified again and defers
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps({"alpha": {"rows_match": True, "hash_match": True}})
     )
     last = _last_green_round(tmp_path)
-    k_alpha = _rotation_key("alpha", last, _change_rounds(reg2, tmp_path), reg_index)
+    k_alpha = _rotation_key("alpha", last, restamp(reg2), reg_index)
     assert k_alpha[0] == 2
 
 
@@ -232,10 +240,9 @@ def test_local_import_dependency_changes_fingerprint(tmp_path, monkeypatch):
     function binds a LOCAL variable, invisible to the ``__globals__``
     walk — an edit to the imported helper (not the query body) must
     still flip the query's fingerprint. Exercised against a throwaway
-    package via the patchable ``_FP_PKG`` prefix, with both the
-    relative and absolute import spellings."""
+    package via the patchable ``query_ledger._FP_PKG`` prefix, with both
+    the relative and absolute import spellings."""
     import importlib
-    import sys
 
     pkg = tmp_path / "fp_probe_pkg"
     pkg.mkdir()
@@ -250,7 +257,7 @@ def test_local_import_dependency_changes_fingerprint(tmp_path, monkeypatch):
         "    return helper()\n"
     )
     monkeypatch.syspath_prepend(str(tmp_path))
-    monkeypatch.setattr("swarm_spark.queries._FP_PKG", "fp_probe_pkg")
+    monkeypatch.setattr(query_ledger, "_FP_PKG", "fp_probe_pkg")
 
     def load():
         for m in [m for m in sys.modules if m.startswith("fp_probe_pkg")]:
@@ -258,17 +265,17 @@ def test_local_import_dependency_changes_fingerprint(tmp_path, monkeypatch):
         return importlib.import_module("fp_probe_pkg.q")
 
     m1 = load()
-    fp_rel_1 = _source_fingerprint(m1.q, None)
-    fp_abs_1 = _source_fingerprint(m1.q_abs, None)
+    fp_rel_1 = source_fingerprint(m1.q, None)
+    fp_abs_1 = source_fingerprint(m1.q_abs, None)
     # rewrite the DEPENDENCY only; the query functions are byte-identical
     (pkg / "dep.py").write_text("def helper():\n    return 2  # changed\n")
     m2 = load()
     assert m2.q.__code__.co_code == m1.q.__code__.co_code
-    assert _source_fingerprint(m2.q, None) != fp_rel_1
-    assert _source_fingerprint(m2.q_abs, None) != fp_abs_1
+    assert source_fingerprint(m2.q, None) != fp_rel_1
+    assert source_fingerprint(m2.q_abs, None) != fp_abs_1
     # identical content on reload → identical fingerprint (no churn)
     m3 = load()
-    assert _source_fingerprint(m3.q, None) == _source_fingerprint(m2.q, None)
+    assert source_fingerprint(m3.q, None) == source_fingerprint(m2.q, None)
 
 
 def test_imported_objects_resolves_registry_pattern():
@@ -279,7 +286,6 @@ def test_imported_objects_resolves_registry_pattern():
 
     from swarm_spark.ops_queries import OPS
     from swarm_spark.ops.text import top_ngrams
-    from swarm_spark.queries import _imported_objects
 
     fn = OPS["corpus_top_ngrams"][0]
     objs = _imported_objects(inspect.getsource(fn), fn.__module__)
@@ -294,7 +300,6 @@ def test_imported_objects_spellings():
     was version-fragile on exactly the relative case)."""
     import swarm_spark.ops.text as text_mod
     from swarm_spark.ops.text import top_ngrams
-    from swarm_spark.queries import _imported_objects
 
     owner = "swarm_spark.ops_queries"
     src = (
@@ -323,62 +328,10 @@ def test_imported_objects_spellings():
     assert _imported_objects("def q():\n    import json\n", owner) == []
 
 
-def test_algo_bump_keeps_since(tmp_path):
-    """A fingerprint-ALGORITHM upgrade must restamp every fp without
-    touching `since`: an algo bump alone must not reorder the rotation
-    ahead of real source changes (the r8 stampede — 83 queries
-    re-windowed at once by a walker fix). A real source change under
-    the SAME algo version still bumps `since` as before."""
-    import swarm_spark.queries as Q
-
-    def q_v1(spark, sf):
-        return "v1"
-
-    def q_v2(spark, sf):
-        return "v2-different-body"
-
-    def q_other(spark, sf):
-        return "other"
-
-    sql = "SELECT 1 AS n"
-    # ledger written under a PREVIOUS algo version: fps are stale noise
-    (tmp_path / "QUERY_HASHES.json").write_text(
-        json.dumps(
-            {
-                "alpha": {"fp": "stale-v1-fp", "since": 3, "algo": Q._FP_ALGO_VERSION - 1},
-                "beta": {"fp": "stale-v1-fp-2", "since": 2},  # no field = algo 1
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r05.json").write_text(
-        json.dumps(
-            {
-                "alpha": {"rows_match": True, "hash_match": True},
-                "beta": {"rows_match": True, "hash_match": True},
-            }
-        )
-    )
-    reg = {"alpha": (q_v1, sql), "beta": (q_other, sql)}
-    since = _change_rounds(reg, tmp_path)
-    assert since == {"alpha": 3, "beta": 2}, "algo bump must keep since"
-    ledger = json.loads((tmp_path / "QUERY_HASHES.json").read_text())
-    assert ledger["alpha"]["algo"] == Q._FP_ALGO_VERSION
-    assert ledger["alpha"]["fp"] not in ("stale-v1-fp", "stale-v1-fp-2")
-    # both stay priority 2 (verified): the bump did not re-window them
-    last = _last_green_round(tmp_path)
-    reg_index = {"alpha": 0, "beta": 1}
-    assert _rotation_key("alpha", last, since, reg_index)[0] == 2
-    assert _rotation_key("beta", last, since, reg_index)[0] == 2
-    # a REAL source change under the (now current) algo version bumps
-    since2 = _change_rounds({"alpha": (q_v2, sql), "beta": (q_other, sql)}, tmp_path)
-    assert since2["alpha"] == 6 and since2["beta"] == 2
-    assert _rotation_key("alpha", last, since2, reg_index)[0] == 1
-
-
 def test_fallout_was_green_most_recently():
     """Queries displaced past the window must have a green row in the
     round they were last checked (we only defer verified queries)."""
-    names = list(all_queries())
+    names = list(queries())
     last = _last_green_round()
     files = {
         int(p.name[len("CORRECTNESS_r") : -len(".json")]): json.loads(p.read_text())
@@ -389,50 +342,3 @@ def test_fallout_was_green_most_recently():
         assert _row_is_green(files[last[n]][n]), (
             f"{n} overflows the window but was not green in r{last[n]}"
         )
-
-
-def test_fingerprint_flap_within_round_restores_since(tmp_path):
-    """An A→B→A fingerprint flap inside the round in progress (edit
-    made and reverted, or a mid-edit import glitch while tests run
-    against a half-edited tree) must NOT masquerade as a this-round
-    source change: when the fp returns to exactly the value whose
-    `since` was displaced, the original `since` is restored and the
-    query does not consume a driver-window slot (observed in r9: 51
-    spurious restamps)."""
-    import json
-
-    def q_a(spark, sf):
-        return "state-a"
-
-    def q_b(spark, sf):
-        return "state-b-transient"
-
-    sql = "SELECT 1 AS n"
-    reg_a = {"alpha": (q_a, sql)}
-    reg_b = {"alpha": (q_b, sql)}
-
-    assert _change_rounds(reg_a, tmp_path) == {"alpha": 1}
-    # round 1 drives green; round 2 begins
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"alpha": {"rows_match": True, "hash_match": True}})
-    )
-    assert _change_rounds(reg_a, tmp_path) == {"alpha": 1}
-    # mid-edit transient: fp flips to B → restamped to the round in
-    # progress (2), with the displaced state remembered
-    assert _change_rounds(reg_b, tmp_path) == {"alpha": 2}
-    # ...and flips back: the original since is restored, not round 2
-    assert _change_rounds(reg_a, tmp_path) == {"alpha": 1}
-    # stable afterwards, and the healed entry carries no stale `prev`
-    assert _change_rounds(reg_a, tmp_path) == {"alpha": 1}
-    ent = json.loads((tmp_path / "QUERY_HASHES.json").read_text())["alpha"]
-    assert "prev" not in ent and ent["since"] == 1
-
-    # a REAL change that lands and STAYS keeps its new since even
-    # after the round's green row arrives (no false healing later)
-    assert _change_rounds(reg_b, tmp_path) == {"alpha": 2}
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps({"alpha": {"rows_match": True, "hash_match": True}})
-    )
-    # round 3 in progress now; flapping back to A is NOT a same-round
-    # revert anymore — it is a new change and restamps to 3
-    assert _change_rounds(reg_a, tmp_path) == {"alpha": 3}
