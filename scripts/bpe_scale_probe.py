@@ -90,10 +90,7 @@ def main() -> int:
     from swarm_spark import get_spark
     from swarm_spark.ops.bpe import bpe_train
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        master=f"local[{cpus}]", extra_conf={"spark.driver.memory": "48g"}
-    )
+    spark = get_spark()
     hist = synth_histogram(spark, args.types).localCheckpoint()
     n = hist.count()
     print(f"histogram: {n} types", file=sys.stderr)

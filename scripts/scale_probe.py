@@ -12,7 +12,7 @@ print the wall-time ratios. Expected ~linear (ratio ≈ 10 ± noise);
 anything clearly super-linear is a finding.
 
 Run:  python scripts/scale_probe.py [--factor 10] [--runs 3]
-Data lands in .scale/f{1,N}/ (gitignored). Uses local[$SPARK_GRAFT_CPUS].
+Data lands in .scale/f{1,N}/ (gitignored). The session is sized by get_spark.
 """
 
 from __future__ import annotations
@@ -1011,11 +1011,11 @@ def main() -> None:
             print(f"generating f{f} ({BASE_DOCS * f} docs)...", flush=True)
             generate(d, f)
 
+    from bench import warm_up
     from swarm_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(app_name="swarm-scale-probe", master=f"local[{cpus}]")
-    spark.range(1000).count()
+    spark = get_spark(app_name="swarm-scale-probe")
+    warm_up(spark)
     results = {}
     for f in (1, args.factor):
         print(f"probing f{f}...", flush=True)

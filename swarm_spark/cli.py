@@ -53,7 +53,8 @@ def _objects(patterns: list[str]):
 def _spark(args):
     from .session import get_spark
 
-    return get_spark(app_name="swarm-spark-cli", master=f"local[{args.cpus}]")
+    master = f"local[{args.cpus}]" if args.cpus else None
+    return get_spark(app_name="swarm-spark-cli", master=master)
 
 
 def _pipeline(spark, args, sink=None):
@@ -1561,7 +1562,7 @@ def cmd_serve(args) -> int:
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="swarm-spark")
-    p.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "4"))
+    p.add_argument("--cpus", help="local cores (default: $SPARK_GRAFT_CPUS, else the host's)")
     sub = p.add_subparsers(dest="command", required=True)
 
     def common(sp, objects=True):

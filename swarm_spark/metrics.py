@@ -7,11 +7,16 @@ each operator emit.
 Pure Py4J traversal of the AQE-finalized physical plan — no listener,
 no callback server, no extra jobs; call it AFTER an action has run the
 query. On a cluster the same numbers feed dashboards; here they feed
-tests and the ``query --metrics`` CLI.
+tests and the ``query --metrics`` CLI. ``job_digest`` adds the job and
+stage side from the live status store, which Spark keeps with the UI
+disabled.
 """
 
 from __future__ import annotations
 
+import re
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 
 
@@ -75,3 +80,39 @@ def scan_summary(df: DataFrame) -> dict:
         "scan_rows": sum(n.get("numOutputRows", 0) for n in scans),
         "output_rows": out_rows,
     }
+
+
+def job_digest(sc, *groups: str) -> dict:
+    """What the jobs of the job groups ``groups`` did: job count,
+    completed stages, their tasks, task and GC seconds, shuffle
+    read+write and spill bytes, and the three longest stages. Read from
+    the live status store, which keeps only the last
+    ``spark.ui.retainedJobs`` / ``retainedStages`` (1000 each), so take a
+    group's digest before it falls out."""
+    # the store is fed by the listener bus, asynchronously to the action
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    job_ids = [jid for g in groups for jid in tracker.getJobIdsForGroup(g)]
+    stage_ids = {sid for jid in job_ids for sid in tracker.getJobInfo(jid).stageIds}
+    run_ms = gc_ms = shuffle = spill = 0
+    done = []
+    for sid in stage_ids:
+        # a job also lists the stages whose shuffle output it reused
+        # (skipped); the store evicts skipped stages first
+        try:
+            s = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            continue
+        if s.status().toString() != "COMPLETE":
+            continue
+        run_ms += s.executorRunTime()
+        gc_ms += s.jvmGcTime()
+        shuffle += s.shuffleReadBytes() + s.shuffleWriteBytes()
+        spill += s.memoryBytesSpilled() + s.diskBytesSpilled()
+        ms = s.completionTime().get().getTime() - s.submissionTime().get().getTime()
+        done.append({"stage": sid, "s": ms / 1000, "tasks": s.numCompleteTasks(),
+                     "name": re.sub(r"\S*/", "", s.name())})
+    return {"jobs": len(job_ids), "stages": len(done), "tasks": sum(d["tasks"] for d in done),
+            "task_s": run_ms / 1000, "gc_s": gc_ms / 1000, "shuffle_bytes": shuffle,
+            "spill_bytes": spill, "top_stages": sorted(done, key=lambda d: -d["s"])[:3]}

@@ -1,8 +1,8 @@
 """SparkSession factory tuned for the swarm-spark engine.
 
-Local-mode defaults mirror the reference's operational envelope
-(/root/reference/pkg/usecase/usecase.go:30-39 — 32-way read concurrency)
-but expressed as Spark parallelism knobs. On a real cluster the same
+Local-mode defaults are sized to the host this process runs on
+(:func:`session_sizing`): every core it may use, half the physical
+memory for the driver heap. On a real cluster the same
 builder is used with ``master`` unset (taken from spark-submit).
 """
 
@@ -11,6 +11,20 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def session_sizing() -> tuple[str, int, str]:
+    """Local master, shuffle partitions and driver heap for this host.
+
+    Cores come from ``SPARK_GRAFT_CPUS``, else the cores this process may
+    run on; the heap from ``SPARK_GRAFT_DRIVER_MEM``, else half the
+    physical memory. Reads the environment and the host, changes nothing.
+    """
+    host_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus))
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 31
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(1, half_gb)}g")
+    return f"local[{cpus}]", int(cpus) if cpus.isdigit() else host_cpus, mem
 
 
 def get_spark(
@@ -37,11 +51,11 @@ def get_spark(
             f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
         )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    local_master, local_partitions, driver_mem = session_sizing()
     if master is None:
-        master = f"local[{cpus}]"
+        master = local_master
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = local_partitions
 
     builder = (
         SparkSession.builder.master(master)
@@ -69,7 +83,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # testdata events.parquet stores TIMESTAMP(NANOS); Spark has no

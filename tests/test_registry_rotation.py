@@ -103,36 +103,50 @@ def test_row_is_green_semantics():
     assert not _row_is_green("garbage")
 
 
+def _sim_rotate(names: list[str], since: dict[str, int]):
+    """The driver's ordering of ``names`` for a simulated ledger
+    ``since`` map, through the contract's own :func:`_rotation_key`."""
+    reg = {n: i for i, n in enumerate(names)}
+    return lambda last: sorted(names, key=lambda n: _rotation_key(n, last, since, reg))
+
+
 def test_every_query_checked_within_ceil_n_over_window_rounds(tmp_path):
     """Simulate the driver across rounds: each round writes green rows
     for the FIRST 50 entries of the rotated order; within any
     ceil(N/50) consecutive rounds, every registry query must have at
     least one row (the tight pigeonhole bound — equal to "every other
-    round" while N <= 100)."""
+    round" while N <= 100). Before round 5, 10 names that were just
+    checked are restamped (their code changed): they enter round 5's
+    window through the source-changed tier, and the bound holds again
+    for every span of rounds after the restamp."""
     names = list(queries())  # current registry, any starting order
     span = -(-len(names) // DRIVER_WINDOW)  # ceil(N/window)
-
-    def rotate(last: dict[str, int]) -> list[str]:
-        reg = {n: i for i, n in enumerate(names)}
-        return sorted(names, key=lambda n: (last.get(n, -1), reg[n]))
+    restamp_round = 5
+    since = {n: 1 for n in names}  # all code in effect before round 1
+    rotate = _sim_rotate(names, since)
 
     def write_round(rnd: int, checked: list[str]):
         (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
             json.dumps({n: {"rows_match": True, "hash_match": True} for n in checked})
         )
 
-    for rnd in range(1, 6):
+    def checked_in(rnd: int) -> set[str]:
+        return set(json.loads((tmp_path / f"CORRECTNESS_r{rnd:02d}.json").read_text()))
+
+    for rnd in range(1, restamp_round + span + 1):
         last = _last_green_round(tmp_path)
+        if rnd == restamp_round:
+            restamped = sorted(checked_in(rnd - 1))[:10]
+            since.update(dict.fromkeys(restamped, rnd))
         order = rotate(last)
         write_round(rnd, order[:DRIVER_WINDOW])
-        if rnd >= span:
+        if rnd == restamp_round:
+            late = set(restamped) - checked_in(rnd)
+            assert not late, f"restamped queries left out of the next window: {late}"
+        if rnd >= span and (rnd < restamp_round or rnd - span >= restamp_round):
             seen: set[str] = set()
             for k in range(rnd - span + 1, rnd + 1):
-                seen |= set(
-                    json.loads(
-                        (tmp_path / f"CORRECTNESS_r{k:02d}.json").read_text()
-                    )
-                )
+                seen |= checked_in(k)
             missing = set(names) - seen
             assert not missing, (
                 f"r{rnd}: not checked within {span} rounds: {missing}"
@@ -144,10 +158,7 @@ def test_red_row_reenters_next_window(tmp_path):
     first-50 window in round N+1 (the ADVICE r5 finding: a red row
     used to count as 'checked' and rotate out)."""
     names = list(queries())
-    reg = {n: i for i, n in enumerate(names)}
-
-    def rotate(last):
-        return sorted(names, key=lambda n: (last.get(n, -1), reg[n]))
+    rotate = _sim_rotate(names, {n: 1 for n in names})
 
     # round 1: first 50 all get rows, but one fails its hash and one errors
     order1 = rotate(_last_green_round(tmp_path))
