@@ -4350,9 +4350,10 @@ def q_similarity_tfidf_pairs(spark, sf):
 
     # The gram corpus is NOT materialized: nothing here persists or
     # checkpoints it. The gram text is built by an interpreted
-    # higher-order `transform` lambda, and tfidf_postings' sizing
-    # count() is a separate job, so the lambda runs at least twice per
-    # build; inside the pairs job only exchange reuse dedupes its
+    # higher-order `transform` lambda; tfidf_postings' sizing count()
+    # is a job of the builder, but column pruning leaves it a
+    # column-less scan and round-robin exchange that never runs the
+    # lambda. Inside the pairs job only exchange reuse dedupes its
     # branches. repartition is not a barrier either: it only spreads
     # the one-row-group scan so each evaluation runs at full width
     # (§2.5). Every sample recomputes from parquet.

@@ -12,7 +12,9 @@ Dataflow, expressed Spark-first::
                      (dataset, table, partition) → per destination the
                      row count, every data leaf's non-void count, and
                      the R3 violations (strict: any → raise, no write)
-        ──G1──▶ loop over the planned destinations
+        ──G1──▶ concurrent per-table workers over the planned
+                destinations (a table's partition units run serially,
+                in plan order, inside its worker)
         ──T1──▶ data struct rebuilt from the plan's kept leaves (no job)
         ──Q1/Q2/Q4──▶ sink.ensure_table (strict merge / evolve)
         ──W1──▶ sink.append (aligned to evolved schema; one write job,
@@ -32,6 +34,11 @@ Scale notes (100 TB):
   so the number of jobs no longer grows with checks × destinations. Its output is one small
   row per destination: the routing columns are low-cardinality by
   construction (table names).
+- The N writes run concurrently, one worker per destination table on a
+  pool of ``min(#tables, defaultParallelism)`` threads (the reference's
+  ``ingestTableConcurrency`` goroutines, load.go:94-118). Each write is
+  mostly driver-side job launch and commit work, so a load's ack waits
+  for its slowest table rather than the sum of its tables.
 - Per-record work (explode fan-out, struct rebuild, md5 id) is all
   Catalyst expressions — whole-stage codegen, no Python in the row
   path (the canonical-id pandas UDF is opt-in).
@@ -41,10 +48,12 @@ from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..functions.ids import canonical_id_column, fast_id_column
 from ..functions.timeutils import timestamp_from_unix
@@ -64,6 +73,15 @@ META_DEST = TableDest("swarm", "load_log")
 # Strict mode: per-row R3 violation flag the envelope carries into the
 # destination plan (the raw timestamp it tests is gone after enveloping)
 VIOLATION_COL = "_violation"
+
+
+def _inheriting(spark: SparkSession, fn):
+    """``fn`` wrapped to run on another thread with a copy, taken now,
+    of this thread's Spark job properties and tags. Wrap once per task:
+    tasks that share one wrapper share one copy, so a job group set in
+    one of them shows in the others."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)  # pinned-thread mode off
 
 
 class IngestPartialFailure(RuntimeError):
@@ -307,30 +325,31 @@ class IngestPipeline:
     def _write_routed(
         self, enveloped: DataFrame, stats: IngestStats, txn=None
     ) -> dict[tuple, int]:
-        """Per-destination evolve+append.
+        """Per-destination evolve+append, one worker per destination table.
 
         The persisted frame first goes through :func:`plan_destinations`,
         the one job that finds the destinations and their void ``data``
         leaves and, in strict mode, raises ``RuleOutputError`` before any
-        write when a row breaks R3. Each destination's ``data`` struct
-        is then rebuilt from the plan's kept leaves without a job, and
-        its append is its one write job.
+        write when a row breaks R3. The planned destinations are then
+        written by :meth:`_write_tables`, concurrently per table (the
+        reference's per-table goroutines, load.go:94-118). Each
+        destination's ``data`` struct is rebuilt from the plan's kept
+        leaves without a job, and its append is its one write job.
 
         Default mode: PARTIAL-failure tolerance — one bad destination
-        (schema conflict, sink failure) never blocks the others; its
-        error is recorded per-ingest and surfaced after every
-        destination has been attempted (reference semantics,
-        load.go:100-130: per-table goroutines report errors
-        independently).
+        (schema conflict, sink failure) never blocks the others; every
+        destination is attempted, then the errors are recorded in plan
+        order and surfaced (reference semantics, load.go:100-130:
+        per-table goroutines report errors independently).
 
         ``atomic=True``: all destination slices stage in a sink
-        transaction; any failure aborts it and no rows become visible
-        (see TableTransaction — schema evolution is still applied
-        eagerly, which is harmless because the merge is monotonic/
-        additive). When the caller passes an open ``txn`` (load_objects
-        spans one across all source groups), this call only STAGES into
-        it and the caller commits once; otherwise the transaction is
-        opened and committed here.
+        transaction. Once every stager has finished, any failure aborts
+        it and no rows become visible (see TableTransaction — schema
+        evolution is still applied eagerly, which is harmless because
+        the merge is monotonic/additive). When the caller passes an open
+        ``txn`` (load_objects spans one across all source groups), this
+        call only STAGES into it and the caller commits once; otherwise
+        the transaction is opened and committed here.
 
         Returns the per-destination staged row counts. They are merged
         into ``stats.rows_by_dest`` here ONLY when this call made the
@@ -339,41 +358,24 @@ class IngestPipeline:
         un-merged and the caller folds them in after ITS commit, so an
         aborted batch never reports rows for invisible destinations."""
         enveloped = enveloped.persist()
-        errors: list[tuple[TableDest, Exception]] = []
         own_txn = txn is None and self.atomic
         if own_txn:
             txn = self.sink.transaction()
         staged: dict[tuple, int] = {}
         try:
-            for plan in plan_destinations(enveloped):
+            plans = plan_destinations(enveloped)
+            errors: list[tuple[TableDest, Exception]] = []
+            for plan, out in zip(plans, self._write_tables(enveloped, plans, txn)):
                 dest = plan.dest
-                batch = enveloped.where(
-                    (F.col("dataset") == dest.dataset)
-                    & (F.col("table") == dest.table)
-                    & (F.col("partition") == dest.partition)
-                ).select("id", "ingest_id", "timestamp", "ingested_at", "data")
-                try:
-                    # T1: per-destination-batch void pruning before inference
-                    batch = strip_struct_column(batch, "data", keep=plan.keep)
-                    merged = self.sink.ensure_table(dest, batch.schema["data"].dataType)
-                    aligned = self._align_data(batch, merged)
-                    if txn is not None:
-                        n = txn.stage(dest, aligned)
-                    elif self.merge:
-                        # id-upsert re-ingest: corrected objects replace
-                        # their previous rows (partition-scoped rewrite)
-                        n = self.sink.merge_by_id(dest, aligned)["rows_in"]
-                    else:
-                        n = self.sink.append(dest, aligned)
-                except Exception as e:  # noqa: BLE001 — recorded, surfaced below
-                    errors.append((dest, e))
-                    stats.errors.append(f"{dest.dataset}.{dest.table}: {e}")
-                    if txn is not None:  # all-or-nothing: first error aborts
-                        txn.abort()
-                        raise IngestPartialFailure(stats, errors) from e
+                if isinstance(out, Exception):
+                    errors.append((dest, out))
+                    stats.errors.append(f"{dest.dataset}.{dest.table}: {out}")
                     continue
                 key = (dest.dataset, dest.table, dest.partition)
-                staged[key] = staged.get(key, 0) + n
+                staged[key] = staged.get(key, 0) + out
+            if errors and txn is not None:  # all-or-nothing: any error aborts
+                txn.abort()
+                raise IngestPartialFailure(stats, errors) from errors[0][1]
             if own_txn:
                 txn.commit()
             if txn is None or own_txn:  # rows are visible: report them
@@ -382,9 +384,60 @@ class IngestPipeline:
         finally:
             enveloped.unpersist()
         if errors and self.strict and txn is None:
-            dest, first = errors[0]
-            raise IngestPartialFailure(stats, errors) from first
+            raise IngestPartialFailure(stats, errors) from errors[0][1]
         return staged
+
+    def _write_tables(self, enveloped: DataFrame, plans: list[DestPlan], txn) -> list:
+        """Write every planned destination; returns, in plan order, each
+        one's row count or the exception it raised.
+
+        One task per ``(dataset, table)`` runs on a pool of
+        ``min(#tables, defaultParallelism)`` threads that is shut down
+        before this returns. Plans of one table (several partition
+        units) stay in one task, in plan order: a table's writes share
+        its directory and, in :class:`~swarm_spark.sinks.dump.DumpSink`,
+        its schema entry. Each task is wrapped on its own, so its jobs
+        carry a private copy of the caller's job group and description."""
+        by_table: dict[tuple[str, str], list[int]] = {}
+        for i, plan in enumerate(plans):
+            by_table.setdefault((plan.dest.dataset, plan.dest.table), []).append(i)
+        outcomes: list = [None] * len(plans)
+
+        def write(indices: list[int]) -> None:
+            for i in indices:
+                try:
+                    outcomes[i] = self._write_one(enveloped, plans[i], txn)
+                except Exception as e:  # noqa: BLE001 — recorded by the caller
+                    outcomes[i] = e
+
+        workers = min(len(by_table), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=max(workers, 1)) as pool:
+            tasks = [
+                pool.submit(_inheriting(self.spark, write), indices)
+                for indices in by_table.values()
+            ]
+        for t in tasks:
+            t.result()
+        return outcomes
+
+    def _write_one(self, enveloped: DataFrame, plan: DestPlan, txn) -> int:
+        dest = plan.dest
+        batch = enveloped.where(
+            (F.col("dataset") == dest.dataset)
+            & (F.col("table") == dest.table)
+            & (F.col("partition") == dest.partition)
+        ).select("id", "ingest_id", "timestamp", "ingested_at", "data")
+        # T1: per-destination-batch void pruning before inference
+        batch = strip_struct_column(batch, "data", keep=plan.keep)
+        merged = self.sink.ensure_table(dest, batch.schema["data"].dataType)
+        aligned = self._align_data(batch, merged)
+        if txn is not None:
+            return txn.stage(dest, aligned)
+        if self.merge:
+            # id-upsert re-ingest: corrected objects replace their
+            # previous rows (partition-scoped rewrite)
+            return self.sink.merge_by_id(dest, aligned)["rows_in"]
+        return self.sink.append(dest, aligned)
 
     def _align_data(self, batch: DataFrame, merged_data: T.StructType) -> DataFrame:
         from ..schema.infer import _align_expr  # aligned struct projection

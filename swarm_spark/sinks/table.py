@@ -860,11 +860,13 @@ class TableTransaction:
     def commit(self) -> None:
         if self.committed:
             return
+        # sorted: destinations may stage concurrently, in any order
+        staged = sorted(self._staged, key=lambda t: (t.dataset, t.table, t.partition))
         manifest = {
             "txn": self.txn_id,
             "tables": [
                 {"dataset": t.dataset, "table": t.table, "partition": t.partition}
-                for t in self._staged
+                for t in staged
             ],
         }
         cdir = os.path.join(self.sink.warehouse, COMMITS_DIR)

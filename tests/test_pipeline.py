@@ -556,3 +556,197 @@ class TestDestinationPlan:
         assert sink.append(dest, empty) == 0
         assert sink._data_files(dest) == files
         assert _landed(sink, dest) == before
+
+
+def _partitioned_rules():
+    """One table whose rows split over two partition units."""
+    rules = SchemaRuleRegistry()
+
+    @rules.rule("split_units")
+    def split_units(df):
+        return rule_output(
+            df,
+            dataset="logs",
+            table="t_one",
+            partition=F.when(F.col("kind") == "a", F.lit("day")).otherwise(F.lit("month")),
+            timestamp=F.col("ts").cast("double"),
+            data=F.struct("kind", "v", "extra", "meta", "tags"),
+        )
+
+    events = EventRuleSet(
+        [EventRule("all", name_suffix(".ndjson"), (Source(schema="split_units"),))]
+    )
+    return events, rules
+
+
+class TestConcurrentWrites:
+    """A load's destination tables are written by concurrent workers;
+    what a caller sees stays that of one destination after another."""
+
+    def _conflicted_sink(self, spark, wh):
+        """A warehouse where ``t_b`` already holds ``data.v`` as a string;
+        the bykind rows carry it as a long."""
+        sink = TableSink(spark, str(wh))
+        sink.ensure_table(BYKIND_DESTS[1], T.StructType([T.StructField("v", T.StringType())]))
+        return sink
+
+    def test_partial_failure_writes_the_other_tables(self, spark, tmp_path):
+        import threading
+
+        from swarm_spark.pipeline import IngestPartialFailure
+
+        events, rules = _bykind_rules()
+        sink = self._conflicted_sink(spark, tmp_path / "wh")
+        pipe = IngestPipeline(spark, events, rules, sink)
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        threads = threading.active_count()
+        with pytest.raises(IngestPartialFailure) as err:
+            pipe.load_objects([obj])
+        assert threading.active_count() == threads
+        assert [d for d, _e in err.value.dest_errors] == [BYKIND_DESTS[1]]
+        assert err.value.stats.rows_by_dest == {
+            ("logs", "t_a", "day"): 2,
+            ("logs", "t_c", "day"): 1,
+        }
+        assert sink.read_table(BYKIND_DESTS[0]).count() == 2
+        assert sink.read_table(BYKIND_DESTS[1]).count() == 0
+        assert sink.read_table(BYKIND_DESTS[2]).count() == 1
+
+    def test_atomic_failure_lands_nothing(self, spark, tmp_path):
+        import os
+        import threading
+
+        from swarm_spark.pipeline import IngestPartialFailure
+
+        events, rules = _bykind_rules()
+        wh = tmp_path / "wh"
+        sink = self._conflicted_sink(spark, wh)
+        pipe = IngestPipeline(spark, events, rules, sink, atomic=True)
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        threads = threading.active_count()
+        with pytest.raises(IngestPartialFailure) as err:
+            pipe.load_objects([obj])
+        assert threading.active_count() == threads
+        assert [d for d, _e in err.value.dest_errors] == [BYKIND_DESTS[1]]
+        assert err.value.stats.rows_by_dest == {}
+        for dest in BYKIND_DESTS:
+            if sink._read_schema(dest) is not None:
+                assert sink.read_table(dest).count() == 0
+        staged = [
+            name
+            for _r, dirs, _f in os.walk(wh)
+            for name in dirs
+            if name.startswith("_staged-")
+        ]
+        assert staged == []
+        commits = wh / "_swarm_commits"
+        assert not commits.exists() or list(commits.iterdir()) == []
+
+    @pytest.mark.parametrize("kind", ["dump", "table"])
+    def test_same_table_plans_land_once(self, spark, tmp_path, monkeypatch, kind):
+        import threading
+        import time
+
+        events, rules = _partitioned_rules()
+        sink = (
+            DumpSink(spark, str(tmp_path / "out"))
+            if kind == "dump"
+            else TableSink(spark, str(tmp_path / "wh"))
+        )
+        # the two partition units of t_one must be written one after
+        # the other: count the appends in flight per table, holding
+        # each open long enough that a concurrent one would overlap it
+        append, lock = type(sink).append, threading.Lock()
+        in_flight: dict[str, int] = {}
+        peak: list[int] = []
+
+        def spied(self, dest, df):
+            with lock:
+                in_flight[dest.table] = in_flight.get(dest.table, 0) + 1
+                peak.append(in_flight[dest.table])
+            try:
+                time.sleep(0.2)
+                return append(self, dest, df)
+            finally:
+                with lock:
+                    in_flight[dest.table] -= 1
+
+        monkeypatch.setattr(type(sink), "append", spied)
+        pipe = IngestPipeline(spark, events, rules, sink)
+        stats = pipe.load_objects([_bykind_object(tmp_path, BYKIND_RECS)])
+        assert peak == [1, 1]
+        assert stats.rows_by_dest == {
+            ("logs", "t_one", "day"): 2,
+            ("logs", "t_one", "month"): 3,
+        }
+        landed = sink.read_table(TableDest("logs", "t_one", "day"))
+        assert sorted(r["data"]["v"] for r in landed.collect()) == [1, 2, 3, 4, 5]
+        data = landed.schema["data"].dataType
+        # ``extra`` is set only in the day rows, ``meta.x`` only in the
+        # month rows: the one merged schema holds both
+        assert sorted(data.fieldNames()) == ["extra", "kind", "meta", "tags", "v"]
+        assert data["meta"].dataType.fieldNames() == ["x"]
+
+    def test_many_tables_under_fast_thread_switching(self, spark, tmp_path):
+        """More tables than workers, with the interpreter switching
+        threads as often as it can: every staged table reaches the one
+        manifest, listed in a fixed order, and every row lands."""
+        import os
+        import sys
+
+        rules = SchemaRuleRegistry()
+
+        @rules.rule("eight")
+        def eight(df):
+            return rule_output(
+                df,
+                dataset="logs",
+                table=F.concat(F.lit("t_"), (F.col("v") % 8).cast("string")),
+                partition="day",
+                timestamp=F.col("ts").cast("double"),
+                data=F.struct("v"),
+            )
+
+        events = EventRuleSet([EventRule("all", name_suffix(".ndjson"), (Source(schema="eight"),))])
+        recs = [{"v": v, "ts": 1700000000 + v} for v in range(32)]
+        wh = tmp_path / "wh"
+        sink = TableSink(spark, str(wh))
+        pipe = IngestPipeline(spark, events, rules, sink, atomic=True)
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            stats = pipe.load_objects([_bykind_object(tmp_path, recs)])
+        finally:
+            sys.setswitchinterval(interval)
+        assert stats.rows_by_dest == {("logs", f"t_{k}", "day"): 4 for k in range(8)}
+        (commit,) = os.listdir(wh / "_swarm_commits")
+        manifest = json.loads((wh / "_swarm_commits" / commit).read_text())
+        assert [t["table"] for t in manifest["tables"]] == [f"t_{k}" for k in range(8)]
+        for k in range(8):
+            landed = sink.read_table(TableDest("logs", f"t_{k}", "day")).collect()
+            assert sorted(r["data"]["v"] for r in landed) == list(range(k, 32, 8))
+
+    def test_write_jobs_carry_the_caller_job_group(self, spark, tmp_path):
+        sc = spark.sparkContext
+        events, rules = _bykind_rules()
+        sink = TableSink(spark, str(tmp_path / "wh"))
+        pipe = IngestPipeline(spark, events, rules, sink)
+        obj = _bykind_object(tmp_path, BYKIND_RECS)
+        store = sc._jsc.sc().statusStore()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)  # newest first
+        before = jobs.apply(0).jobId() if jobs.size() else -1
+        group = f"attr-{id(self)}"
+        sc.setJobGroup(group, "load")
+        try:
+            stats = pipe.load_objects([obj])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert stats.total_rows == 5
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        started = {jobs.apply(i).jobId() for i in range(jobs.size())}
+        started = {j for j in started if j > before}
+        # the scan, the plan and one write per destination at least
+        assert len(started) >= 5
+        assert started <= set(sc.statusTracker().getJobIdsForGroup(group))
