@@ -48,23 +48,27 @@ Scale shape (the 100-TB story):
   and salted two-phase top-k bound every window task at ~k rows.
 
 Session-cache contract (r14 VERDICT #6): both pruned rankers run one
-MaxScore gate ladder (``_maxscore_topk``), which persist()s the frames
-its ~5 serial gate actions share so each materializes once: the ad-hoc
-entry's batch-restricted postings, and the query-side ``qterms``,
-``qw`` (per-term weights), ``qub`` (per-term upper bounds),
-``seed_term``, ``seed_pairs`` and ``ess`` (essential terms); θ is a
-driver-local frame, not a cache entry. The query-side frames are
-≤ |Q|·terms rows (``seed_pairs`` is bounded by the seed df cap) but
-are NOT unpersisted on exit (a lazy frame is returned; the terminal
-action happens at the caller). Batch jobs and the bench clear the
-session cache between queries; a long-lived serving session should
-`spark.catalog.clearCache()` between query batches.
+MaxScore gate ladder (``_maxscore_topk``). Its first gate is priced
+by ONE action that brings the batch's query-term rows (weights,
+volume statistic, upper bound) and the corpus totals to the driver,
+so the query-side frames built from them — ``qw`` (per-term
+weights), ``qub`` (per-term upper bounds) and ``seed_term`` — are
+driver-local frames, like θ. The ladder persist()s
+only what a later action or the returned plan re-reads: the ad-hoc
+entry's batch-restricted postings (the pricing action and the
+returned plan), and, past gate #1, ``qw``, ``seed_pairs`` and ``ess``
+(essential terms). They are NOT unpersisted on exit (a lazy frame is
+returned; the terminal action happens at the caller). Batch jobs and
+the bench clear the session cache between queries; a long-lived
+serving session should `spark.catalog.clearCache()` between query
+batches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .sampling import hash_bucket
 from .text import tokens_col
@@ -236,14 +240,23 @@ def _probe_index(
     return post, totals, small
 
 
+def _totals_agg(totals: DataFrame) -> DataFrame:
+    """(__n, __tt): a totals frame's rows (one per appended wave — the
+    additive-statistic contract) folded into ONE row."""
+    return totals.agg(
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("__n"),
+        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("__tt"),
+    )
+
+
 def _sum_totals(totals: DataFrame) -> tuple[int, int]:
-    """(n_docs, tot_tokens) folded over a totals frame's rows (one per
-    appended wave — the additive-statistic contract): ONE driver row."""
-    tot = totals.agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n"),
-        F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("tt"),
-    ).head()
-    return int(tot["n"]), int(tot["tt"])
+    """(n_docs, tot_tokens) of a totals frame: ONE driver row."""
+    tot = _totals_agg(totals).head()
+    return int(tot["__n"]), int(tot["__tt"])
+
+
+def _lit(x: int) -> Column:
+    return F.lit(float(x))
 
 
 def bm25_topk(
@@ -393,13 +406,13 @@ def _materialize_small(df: DataFrame) -> DataFrame:
 class _Bm25Scorer:
     """BM25's side of :func:`_maxscore_topk`: idf-weighted DISTINCT
     query terms, ``df`` as the posting-volume statistic, and no
-    exclusion slack (every contribution is non-negative). The upper
-    bound needs no corpus token total, so on the ad-hoc entry ``tt``
-    rides gate #1 instead of costing its own action."""
+    exclusion slack (every contribution is non-negative). ``weights``
+    and ``ub`` take the corpus totals as columns, so the ladder's
+    pricing action evaluates them next to the totals aggregate and the
+    ranking plans evaluate them over literals — one expression each."""
 
     vol = "df"
     salt, seed_salt = "swarm-bm25", "swarm-bm25p"
-    ub_needs_tt = False
     stats = staticmethod(bm25_stats)
 
     def __init__(self, k1: float, b: float):
@@ -408,18 +421,18 @@ class _Bm25Scorer:
     def query_terms(self, qtoks: DataFrame, bcast) -> DataFrame:
         return qtoks.distinct()
 
-    def weights(self, qterms: DataFrame, stats: DataFrame, n: int, tt) -> DataFrame:
+    def check(self, n: int, tt: int) -> None:
         if n == 0:
             raise ValueError("corpus is empty")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.lit(float(n)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        )
-        return qterms.join(stats, "tok").select(
-            "query_id", "tok", idf.alias("idf"), "df"
-        )
 
-    def ub(self, tt) -> Column:
+    def weights(self, n: Column, tt: Column) -> list[Column]:
+        # over query terms ⋈ stats; n/tt are double columns
+        idf = F.log(
+            F.lit(1.0) + (n - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+        )
+        return [idf.alias("idf"), F.col("df")]
+
+    def ub(self, tt: Column) -> Column:
         # the tf-norm at dl -> 0 bounds every posting's contribution
         # (tf-norm rises with tf, falls with dl; round is monotone; +1
         # absorbs float-rounding headroom)
@@ -462,14 +475,131 @@ def _rank_all(
     if stats is None:
         stats = scorer.stats(post)
     n, tt = _sum_totals(totals)
+    scorer.check(n, tt)
     bcast = F.broadcast if small else (lambda frame: frame)
     qtoks = _query_tokens(queries, query_id_col, query_text_col)
     # query terms meet the vocab-sized stats in an equi-join FIRST; the
     # |Q|*terms-row result is what broadcasts into the postings join
-    qw = scorer.weights(scorer.query_terms(qtoks, bcast), stats, n, tt)
+    qw = (
+        scorer.query_terms(qtoks, bcast)
+        .join(stats, "tok")
+        .select("query_id", "tok", *scorer.weights(_lit(n), _lit(tt)))
+    )
     return _two_phase_topk(
         scorer.score(post.join(bcast(qw), "tok"), n, tt), k, n_salts, scorer.salt
     )
+
+
+def _price_batch(scorer, qterms, stats, bounds, totals, k: int, seed_terms: int):
+    """Gate #1 of :func:`_maxscore_topk`, priced from the stored
+    statistics in ONE action (REPOSE-style: precomputed per-term bounds
+    make the pruning decision a metadata step, not a distributed plan).
+    The action returns the batch's query-term rows — (query_id, tok,
+    weights, ub) over query terms ⋈ stats ⋈ bounds, at most
+    |Q|·terms rows, the frame the ranking joins broadcast anyway — with
+    the corpus totals (n, tt) riding along as columns, so the scorer's
+    ``weights``/``ub`` expressions evaluate inside the same action.
+    Seed choice and the gate sums then run on the driver.
+
+    Returns (n, tt, v_all, qw, qub, seed_term): ``qw`` (query_id, tok,
+    weights) is a driver-local frame; ``qub`` (query_id, tok, vol, ub)
+    and ``seed_term`` (query_id, tok) are built only when the batch
+    passes the gate, else both are None (route exhaustive)."""
+    vol = scorer.vol
+    n_c, tt_c = F.col("__n").cast("double"), F.col("__tt").cast("double")
+    # LEFT join: a query term missing from the bounds table (a partial
+    # bounds build) gets an infinite upper bound — always essential, so
+    # incomplete bounds degrade pruning, never correctness. (A PRESENT
+    # but stale max_tf that underestimates a newer wave's true max
+    # would break the bound — fold bounds with the same groupBy-max as
+    # the other statistics when appending.) The totals row is the
+    # preserved side, so it comes back even for a batch with no
+    # corpus term (one all-null term row).
+    priced = (
+        _totals_agg(totals)
+        .join(
+            qterms.join(stats, "tok").join(bounds, "tok", "left"), F.lit(True), "left"
+        )
+        .select("__n", "__tt", "query_id", "tok", "max_tf", *scorer.weights(n_c, tt_c))
+        .withColumn(
+            "ub",
+            # 2^52: unreachable by any real theta (scores are ~2^31)
+            # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
+            F.when(F.col("max_tf").isNull(), F.lit(1 << 52)).otherwise(scorer.ub(tt_c)),
+        )
+        .drop("max_tf")
+    )
+    rows = priced.collect()
+    n, tt = int(rows[0]["__n"]), int(rows[0]["__tt"])
+    scorer.check(n, tt)
+    terms = [r for r in rows if r["tok"] is not None]
+    spark, schema = qterms.sparkSession, priced.schema
+
+    def _local(rs, cols):
+        # the rows come from a frame of this very schema
+        return spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rs],
+            StructType([schema[c] for c in cols]),
+            verifySchema=False,
+        )
+
+    qw = _local(terms, [c for c in priced.columns if c not in ("__n", "__tt", "ub")])
+
+    # seed from the top-`seed_terms` upper-bound terms (ub descending,
+    # ties by tok), not just one: on rare-tail vocabularies the single
+    # top term's posting list can hold fewer than k docs, leaving theta
+    # undefined and pruning disabled; a handful of rare lists still
+    # seeds cheaply, and theta stays a LOWER bound whatever the seed
+    # subset is (any doc scoring >= theta is in the candidate set by
+    # the exclusion bound, so the proof never needs seed membership).
+    # Terms whose volume statistic exceeds max(k, N/8) never seed: a
+    # term matching an eighth of the corpus cannot give a selective
+    # theta, and exactly scoring its posting list costs a large
+    # fraction of the exhaustive plan (measured: short queries whose
+    # rare terms ran out pulled stopword posting lists into seeding —
+    # 2.9x the exhaustive wall on the doc-length Zipf batch). cf >= df,
+    # so LM's cf cap errs toward the exhaustive route, never toward an
+    # expensive seed.
+    seed_cap = max(k, n // 8)
+    by_query: dict = {}
+    for r in terms:
+        if r[vol] <= seed_cap:
+            by_query.setdefault(r["query_id"], []).append(r)
+    seeds = [
+        r
+        for rs in by_query.values()
+        for r in sorted(rs, key=lambda r: (-r["ub"], r["tok"]))[:seed_terms]
+    ]
+
+    # Pruning exists to make candidates follow rare posting lists; when
+    # the top-ub "rare" seed terms already carry > 1/3 of the batch's
+    # total posting volume, the vocabulary has no rarity to exploit
+    # (the saturated case: min df ≈ max df) and the seed/verify passes
+    # would pay joins for ~zero cut — measured slower than exhaustive
+    # at 10x. The second condition prices the seed VERIFY fan-out:
+    # each seed pair is exactly scored against its doc's batch-vocab
+    # posting rows, so the seed cost is ~v_seed·(slice_rows/N), where
+    # slice_rows (Σ vol over the batch's DISTINCT tokens) is the seed
+    # verify's scan width; on doc-length query batches (batch vocab ≈
+    # corpus vocab) that alone reaches exhaustive volume even when
+    # v_seed looks tiny — measured before this term: seed scoring ≈
+    # 0.9× the exhaustive aggregation on the full-doc Zipf batch. No
+    # seed term at all (a fully saturated vocabulary) makes theta
+    # impossible. Results are identical either way (the pruning
+    # proof), so fall back to the exhaustive plan shape.
+    v_all = sum(r[vol] for r in terms)
+    v_seed = sum(r[vol] for r in seeds)
+    slice_rows = sum({r["tok"]: r[vol] for r in terms}.values())
+    if (
+        not seeds
+        or v_all == 0
+        or n == 0
+        or v_seed * 3 > v_all
+        or v_seed * (float(slice_rows) / float(n)) * 3.0 > float(v_all)
+    ):
+        return n, tt, v_all, qw, None, None
+    qub = _local(terms, ["query_id", "tok", vol, "ub"])
+    return n, tt, v_all, qw, qub, _local(seeds, ["query_id", "tok"])
 
 
 def _maxscore_topk(
@@ -510,8 +640,8 @@ def _maxscore_topk(
                 scorer, docs, queries, k, text_col, id_col, query_id_col,
                 query_text_col, n_salts, broadcast_max_queries, None, stats, totals,
             )
-    # ad-hoc entry: the gate aggregations below are separate driver
-    # actions, and WITHOUT caching each one re-derives the postings
+    # ad-hoc entry: the pricing action and the later gate actions all
+    # read the postings, and WITHOUT caching each one re-derives them
     # (explode + aggregation over the raw corpus) from scratch —
     # measured as the bulk of this entry shape's 1.5x-over-exhaustive
     # bench overhead. persist() keeps lineage (executor loss
@@ -525,127 +655,17 @@ def _maxscore_topk(
         stats = scorer.stats(post)
     if bounds is None:
         bounds = bm25_term_bounds(post)
-    if postings is None and not scorer.ub_needs_tt:
-        # ad-hoc entry: n (idf's only corpus input needed BEFORE the
-        # gate decision) is a column-pruned count — no tokenize scan;
-        # tt (avgdl's input, used only by the scoring expressions that
-        # run after the gates) rides the gate action below, so the
-        # totals tokenize and the postings materialization run as
-        # parallel stages of ONE job instead of two serial actions
-        n, tt = int(docs.count()), None
-    else:
-        n, tt = _sum_totals(totals)
 
     def _b(frame):
         return F.broadcast(frame) if small else frame
 
     vol = scorer.vol
-    # The gate machinery below runs ~5 SERIAL driver actions (vol,
-    # elig_vol, theta, ev, final) and each one re-executed this whole
-    # query-side lineage — queries tokenize + explode + distinct +
-    # stats/bounds joins + the seed window — measured as the bulk of
-    # the pruned probes' builder wall (13-15 s of a 19 s lm_pruned_idx
-    # at sf0.1, the same subtrees rebuilt per action). These frames are
-    # METADATA-sized by contract (<= |Q|·query_terms rows), so persist
-    # them once (r14, guide §5: cache exactly what is reused across
-    # actions); the first gate action materializes them as a side
-    # effect and every later action + the returned plan reads the
-    # cache.
     qterms = scorer.query_terms(
         _query_tokens(queries, query_id_col, query_text_col), _b
-    ).persist()
-    qw = scorer.weights(qterms, stats, n, tt).persist()
-    # LEFT join: a query term missing from the bounds table (a partial
-    # bounds build) gets an infinite upper bound — always essential, so
-    # incomplete bounds degrade pruning, never correctness. (A PRESENT
-    # but stale max_tf that underestimates a newer wave's true max
-    # would break the bound — fold bounds with the same groupBy-max as
-    # the other statistics when appending.)
-    qub = qw.join(bounds, "tok", "left").select(
-        "query_id",
-        "tok",
-        vol,
-        F.when(
-            # 2^52: unreachable by any real theta (scores are ~2^31)
-            # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
-            F.col("max_tf").isNull(), F.lit(1 << 52)
-        )
-        .otherwise(scorer.ub(tt))
-        .alias("ub"),
-    ).persist()
-
-    # seed from the top-`seed_terms` upper-bound terms, not just one:
-    # on rare-tail vocabularies the single top term's posting list can
-    # hold fewer than k docs, leaving theta undefined and pruning
-    # disabled; a handful of rare lists still seeds cheaply, and theta
-    # stays a LOWER bound whatever the seed subset is (any doc scoring
-    # >= theta is in the candidate set by the exclusion bound, so the
-    # proof never needs seed membership). Terms whose volume statistic
-    # exceeds max(k, N/8) never seed: a term matching an eighth of the
-    # corpus cannot give a selective theta, and exactly scoring its
-    # posting list costs a large fraction of the exhaustive plan
-    # (measured: short queries whose rare terms ran out pulled stopword
-    # posting lists into seeding — 2.9x the exhaustive wall on the
-    # doc-length Zipf batch). cf >= df, so LM's cf cap errs toward the
-    # exhaustive route, never toward an expensive seed.
-    seed_cap = max(k, n // 8)
-    wseed = Window.partitionBy("query_id").orderBy(F.col("ub").desc(), F.col("tok"))
-    seed_term = (
-        qub.where(F.col(vol) <= F.lit(seed_cap))
-        .withColumn("__r", F.row_number().over(wseed))
-        .where(F.col("__r") <= seed_terms)
-        .select("query_id", "tok")
-        .persist()
     )
-
-    # -------- adaptive effectiveness gate #1 (metadata-priced: one
-    # aggregation over the |Q|*terms-row stats join, NO postings scan).
-    # Pruning exists to make candidates follow rare posting lists; when
-    # the top-ub "rare" seed terms already carry > 1/3 of the batch's
-    # total posting volume, the vocabulary has no rarity to exploit
-    # (the saturated case: min df ≈ max df) and the seed/verify passes
-    # would pay joins for ~zero cut — measured slower than exhaustive
-    # at 10x. The second condition prices the seed VERIFY fan-out:
-    # each seed pair is exactly scored against its doc's batch-vocab
-    # posting rows, so the seed cost is ~v_seed·(slice_rows/N), and on
-    # doc-length query batches (batch vocab ≈ corpus vocab) that alone
-    # reaches exhaustive volume even when v_seed looks tiny — measured
-    # before this term: seed scoring ≈ 0.9× the exhaustive aggregation
-    # on the full-doc Zipf batch. Results are identical either way
-    # (the pruning proof), so fall back to the exhaustive plan shape.
-    # slice_rows (Σ vol over the batch's DISTINCT tokens — the seed
-    # verify's scan width) rides the SAME action as the vol gate: both
-    # are 1-row aggregates, so a crossJoin folds them into one job —
-    # the second driver action was pure fixed overhead at bench scale
-    slice_agg = (
-        qterms.select("tok")
-        .distinct()
-        .join(stats, "tok")
-        .agg(F.coalesce(F.sum(vol), F.lit(0)).alias("slice_rows"))
+    n, tt, v_all, qw, qub, seed_term = _price_batch(
+        scorer, qterms, stats, bounds, totals, k, seed_terms
     )
-    gate1 = (
-        qterms.join(stats, "tok")
-        .join(seed_term.withColumn("__s", F.lit(1)), ["query_id", "tok"], "left")
-        .agg(
-            F.coalesce(F.sum(vol), F.lit(0)).alias("v_all"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.col(vol)).otherwise(0)),
-                F.lit(0),
-            ).alias("v_seed"),
-            F.coalesce(
-                F.sum(F.when(F.col("__s").isNotNull(), F.lit(1)).otherwise(0)),
-                F.lit(0),
-            ).alias("n_seed"),
-        )
-        .crossJoin(slice_agg)
-    )
-    if not scorer.ub_needs_tt:
-        gate1 = gate1.crossJoin(
-            totals.agg(F.coalesce(F.sum("tot_tokens"), F.lit(0)).alias("__tt"))
-        )
-    g1 = gate1.head()
-    if tt is None:
-        tt = int(g1["__tt"])
     qw_b = _b(qw)
     # batch-vocabulary scan restriction for the exact-scoring joins:
     # one semi-join on tok emits Σ df over the batch's DISTINCT tokens
@@ -669,21 +689,14 @@ def _maxscore_topk(
             tt,
         )
 
-    # no seed term passed the volume cap (fully saturated vocabulary):
-    # theta is impossible, so skip the empty seed/verify machinery —
-    # this ride-along count makes the skip metadata-priced
-    if int(g1["n_seed"]) == 0:
+    if seed_term is None:
         return _exhaustive()
-    v_all = int(g1["v_all"])
-    slice_rows = int(g1["slice_rows"])
-    v_seed = int(g1["v_seed"])
-    if (
-        v_all == 0
-        or n == 0
-        or v_seed * 3 > v_all
-        or v_seed * (float(slice_rows) / float(n)) * 3.0 > float(v_all)
-    ):
-        return _exhaustive()
+    # past gate #1 every later action (elig_vol, θ, gate #2) and the
+    # returned plan read the weights, so stage them once; the cached
+    # relation's exact size also keeps AQE's join choices static (the
+    # driver-local frame has no size estimate, and the θ action's job
+    # count varied from run to run without the cache)
+    qw.persist()
 
     # df-bounded by the seed cap and reused by the eligibility count,
     # the routing gate and the theta scoring — persist (§5)
@@ -716,8 +729,7 @@ def _maxscore_topk(
     # as the local eligible set, so the theta job never recomputes the
     # seed-doc counting subtree.
     elig_vol = (
-        qterms.join(stats, "tok")
-        .join(_b(elig_q), "query_id")
+        qw.join(_b(elig_q), "query_id")
         .groupBy("query_id")
         .agg(F.coalesce(F.sum(vol), F.lit(0)).alias("v_q"))
     )
@@ -767,8 +779,7 @@ def _maxscore_topk(
     # ~all pairs: take the exhaustive shape for everything instead.
     theta_q = theta.select("query_id")
     ev = (
-        qterms.join(theta_q, "query_id")
-        .join(stats, "tok")
+        qw.join(theta_q, "query_id")
         .join(ess.withColumn("__e", F.lit(1)), ["query_id", "tok"], "left")
         .agg(
             F.coalesce(
@@ -859,15 +870,19 @@ def bm25_pruned(
     they are as small as pruning makes them), so the score aggregation
     and top-k windows see only surviving candidates.
 
-    Pruning is also SELF-DISABLING where it cannot help: two
-    metadata-priced volume checks against the df statistic (one before
-    any postings work, one after θ) detect a vocabulary with no
+    Pruning is also SELF-DISABLING where it cannot help: two volume
+    checks against the df statistic detect a vocabulary with no
     rarity spread — the saturated case, where every "rare" term is
     dense and the candidate set cannot shrink — and return the plain
     exhaustive plan instead of paying seed/verify joins for nothing
     (measured: unguarded pruning on a fully saturated vocab ran slower
-    than the exhaustive ranker; see SCALING.md). Results are identical
-    on every path — that is the theorem the oracle checks.
+    than the exhaustive ranker; see SCALING.md). The first check runs
+    before any seed or verify work, in one action over the query
+    terms' statistics and the corpus totals; on the ad-hoc entry that
+    action also materializes the batch-restricted postings the df and
+    bounds statistics are derived from. The second runs after θ.
+    Results are identical on every path — that is the theorem the
+    oracle checks.
 
     ``min_prune_queries`` is the AD-HOC batch-size pre-gate (r11
     VERDICT #1): on the ad-hoc entry the gate machinery's extra driver
@@ -947,12 +962,10 @@ class _LmScorer:
     """Dirichlet query likelihood's side of :func:`_maxscore_topk`
     (bound and normalizer slack: see :func:`lm_pruned`): query terms
     keep their multiplicity ``qtf`` and ``cf`` is the volume statistic.
-    The upper bound needs the corpus token total |C|, so ``tt`` is
-    resolved before the gates on both entry shapes."""
+    The upper bound reads the corpus token total |C| (``tt``)."""
 
     vol = "cf"
     salt, seed_salt = "swarm-lm", "swarm-lmp"
-    ub_needs_tt = True
     stats = staticmethod(lm_cf_stats)
 
     def __init__(self, mu: float):
@@ -967,17 +980,17 @@ class _LmScorer:
             F.count(F.lit(1)).cast("long").alias("qtf")
         )
 
-    def weights(self, qterms: DataFrame, stats: DataFrame, n: int, tt) -> DataFrame:
+    def check(self, n: int, tt: int) -> None:
         if tt == 0:
             raise ValueError("corpus has no tokens")
-        return qterms.join(stats, "tok").select("query_id", "tok", "qtf", "cf")
 
-    def _ln_micro(self, tf_col: Column, tt: int) -> Column:
+    def weights(self, n: Column, tt: Column) -> list[Column]:
+        return [F.col("qtf"), F.col("cf")]
+
+    def _ln_micro(self, tf_col: Column, tt: Column) -> Column:
         return F.round(
             F.lit(1_000_000.0)
-            * F.log(
-                F.lit(1.0) + (tf_col * F.lit(float(tt))) / (F.lit(self.mu) * F.col("cf"))
-            )
+            * F.log(F.lit(1.0) + (tf_col * tt) / (F.lit(self.mu) * F.col("cf")))
         ).cast("long")
 
     def _norm(self, dl_col: Column) -> Column:
@@ -985,11 +998,11 @@ class _LmScorer:
             F.lit(1_000_000.0) * F.log(F.lit(self.mu) / (dl_col + F.lit(self.mu)))
         ).cast("long")
 
-    def ub(self, tt: int) -> Column:
+    def ub(self, tt: Column) -> Column:
         return F.col("qtf") * self._ln_micro(F.col("max_tf"), tt) + 1
 
     def score(self, joined: DataFrame, n: int, tt: int) -> DataFrame:
-        term_micro = F.col("qtf") * self._ln_micro(F.col("tf"), tt)
+        term_micro = F.col("qtf") * self._ln_micro(F.col("tf"), _lit(tt))
         pairs = (
             joined.select("query_id", "id", "dl", term_micro.alias("__t"))
             .groupBy("query_id", "id")

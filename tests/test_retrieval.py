@@ -798,14 +798,15 @@ class TestPrunedTopk:
         assert "documents" not in final
         assert final.count("Scan parquet") <= 8
 
-    # Spark jobs on the skew fixture, measured with the two rankers'
-    # former separate ladders (local[4], 4 shuffle partitions): (build,
-    # most seen for the collect). Building runs the ladder's serial gate
-    # actions, so an added gate action shows up in the build count,
-    # which is deterministic; the collect varies by one job between
-    # runs under adaptive execution. BM25's ladder is pinned exactly,
-    # LM's may only get cheaper.
-    LADDER_JOBS = {"bm25_pruned": (56, 15), "lm_pruned": (62, 20)}
+    # Spark jobs on the skew fixture with gate #1 priced in one action
+    # (local[4], 4 shuffle partitions): (build, most seen for the
+    # collect). Building runs the ladder's serial gate actions, so an
+    # added gate action shows up in the build count, which is
+    # deterministic; the collect varies by one job between runs under
+    # adaptive execution. BM25's ladder is pinned exactly (56 with the
+    # in-plan gate #1), LM's may only get cheaper (measured 44; 60
+    # before).
+    LADDER_JOBS = {"bm25_pruned": (38, 15), "lm_pruned": (44, 20)}
 
     @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
     def test_ladder_jobs_pinned(self, spark, name):
@@ -853,6 +854,128 @@ class TestPrunedTopk:
             bm25_pruned(None, qs)
         with pytest.raises(ValueError):
             lm_pruned(None, qs)
+
+
+class TestGateOnePricing:
+    """Gate #1 of the MaxScore ladder is priced by ONE action (the
+    batch's query-term statistics with the corpus totals riding along)
+    and decided on the driver. Each case hard-codes the route and the
+    seed terms the former in-plan gate (a seed window plus a one-row
+    aggregate) chose on the same fixture, so a change to the seed
+    filter or order shows up here even though results stay equal by
+    the pruning theorem."""
+
+    MIXED_DOCS = (
+        [(i, "selective common filler") for i in range(4)]
+        + [(10, "unique common filler")]
+        + [(i, "common filler noise") for i in range(20, 85)]
+    )
+    # fixture -> (queries, k, seed_terms, seeds gate #1 keeps, final
+    # plan is the union path); seeds None: gate #1 routes exhaustive
+    CASES = {
+        "mixed": (
+            [(0, "selective common"), (1, "unique common")],
+            3, 1, [(0, "selective"), (1, "unique")], True,
+        ),
+        # query 2 has two seedable terms and one seed slot: the higher
+        # upper bound (the rarer "unique") must win
+        "mixed_seed_order": (
+            [(0, "selective common"), (1, "unique common"), (2, "selective unique common")],
+            3, 1, [(0, "selective"), (1, "unique"), (2, "unique")], True,
+        ),
+        # ops_mix's shape: kw units over a 30-word vocabulary, every
+        # word in most docs; the seed verify fan-out fails the gate
+        "saturated_kw": (None, 5, 8, None, False),
+    }
+
+    def _fixture(self, spark, case):
+        import random
+
+        from swarm_spark.ops_queries import _kw_corpus, _kw_queries
+
+        rows, k, seed_terms, _, _ = self.CASES[case]
+        if rows is not None:
+            docs = _docs(spark, self.MIXED_DOCS)
+            qs = _docs(spark, rows).select(F.col("doc_id").alias("query_id"), "text")
+            return docs, qs, k, seed_terms
+        rng = random.Random(7)
+        words = [f"w{i:02d}" for i in range(30)]
+        raw = _docs(
+            spark,
+            [
+                (i, " ".join(rng.choice(words) for _ in range(rng.randint(10, 20))))
+                for i in range(40)
+            ],
+        )
+        return _kw_corpus(raw), _kw_queries(raw), k, seed_terms
+
+    @pytest.mark.parametrize("entry", ["adhoc", "persisted"])
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    @pytest.mark.parametrize("case", sorted(CASES))
+    def test_one_action_same_route(self, spark, tmp_path, monkeypatch, case, name, entry):
+        from swarm_spark.ops import retrieval
+        from swarm_spark.ops.retrieval import bm25_term_bounds, load_bm25_bounds, save_bm25_bounds
+
+        pruned, exhaustive, stats_kw = TestPrunedTopk._rankers(name)
+        docs, qs, k, seed_terms = self._fixture(spark, case)
+        kwargs = {"k": k, "seed_terms": seed_terms}
+        if entry == "adhoc":
+            args, kwargs["min_prune_queries"] = (docs, qs), None
+        else:
+            path = str(tmp_path / "idx")
+            post = bm25_postings(docs)
+            save_bm25(post, bm25_stats(post), bm25_totals(docs), path)
+            save_bm25_bounds(bm25_term_bounds(post), path)
+            p, s, t = load_bm25(spark, path)
+            args = (None, qs)
+            kwargs.update(postings=p, totals=t, bounds=load_bm25_bounds(spark, path), **stats_kw(s))
+
+        # every DataFrame action, outermost calls only (head -> take ->
+        # collect is one action), between markers left by the probe and
+        # by the route decision
+        events, depth, out = [], [0], {}
+
+        def spy_action(fn):
+            def wrapped(*a, **kw):
+                depth[0] += 1
+                try:
+                    return fn(*a, **kw)
+                finally:
+                    depth[0] -= 1
+                    if depth[0] == 0:
+                        events.append("action")
+            return wrapped
+
+        def mark(fn, label):
+            def wrapped(*a, **kw):
+                out[label] = fn(*a, **kw)
+                events.append(label)
+                return out[label]
+            return wrapped
+
+        frame_cls = type(qs)  # the concrete (classic) DataFrame class
+        for action in ("collect", "count", "head", "take", "first", "toLocalIterator", "toPandas"):
+            monkeypatch.setattr(frame_cls, action, spy_action(getattr(frame_cls, action)))
+        monkeypatch.setattr(retrieval, "_probe_index", mark(retrieval._probe_index, "probed"))
+        monkeypatch.setattr(retrieval, "_price_batch", mark(retrieval._price_batch, "routed"))
+        spark.catalog.clearCache()
+        try:
+            df = pruned(*args, **kwargs)
+            monkeypatch.undo()
+            between = events[events.index("probed") + 1 : events.index("routed")]
+            assert between == ["action"]
+            seed_term = out["routed"][-1]
+            _, _, _, want_seeds, want_union = self.CASES[case]
+            if want_seeds is None:
+                assert seed_term is None
+            else:
+                assert sorted(map(tuple, seed_term.collect())) == want_seeds
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert ("Union" in plan) == want_union
+            got = sorted(map(tuple, df.collect()))
+            assert got == sorted(map(tuple, exhaustive(docs, qs, k=k).collect())) and got
+        finally:
+            spark.catalog.clearCache()
 
 
 class TestPhraseMatchRare:
