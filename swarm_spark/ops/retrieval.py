@@ -49,26 +49,24 @@ Scale shape (the 100-TB story):
 
 Session-cache contract (r14 VERDICT #6): both pruned rankers run one
 MaxScore gate ladder (``_maxscore_topk``). Its first gate is priced
-by ONE action that brings the batch's query-term rows (weights,
-volume statistic, upper bound) and the corpus totals to the driver,
-so the query-side frames built from them — ``qw`` (per-term
-weights), ``qub`` (per-term upper bounds) and ``seed_term`` — are
-driver-local frames, like θ. The ladder persist()s
-only what a later action or the returned plan re-reads: the ad-hoc
-entry's batch-restricted postings (the pricing action and the
-returned plan), and, past gate #1, ``qw``, ``seed_pairs`` and ``ess``
-(essential terms). They are NOT unpersisted on exit (a lazy frame is
-returned; the terminal action happens at the caller). Batch jobs and
-the bench clear the session cache between queries; a long-lived
-serving session should `spark.catalog.clearCache()` between query
-batches.
+by ONE action over the batch's query-term rows (weights, volume
+statistic, upper bound) with the corpus totals riding along; the
+seed choice runs on the driver, so ``seed_term`` is a driver-local
+frame, like θ. The ladder persist()s only what a later action or
+the returned plan re-reads: the ad-hoc entry's batch-restricted
+postings, the priced query-term rows (``qw`` and, past gate #1,
+``qub`` read them back), and, past gate #1, ``seed_pairs`` and
+``ess`` (essential terms). They are NOT unpersisted on exit (a lazy
+frame is returned; the terminal action happens at the caller). Batch
+jobs and the bench clear the session cache between queries; a
+long-lived serving session should `spark.catalog.clearCache()`
+between query batches.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .sampling import hash_bucket
 from .text import tokens_col
@@ -494,31 +492,36 @@ def _price_batch(scorer, qterms, stats, bounds, totals, k: int, seed_terms: int)
     """Gate #1 of :func:`_maxscore_topk`, priced from the stored
     statistics in ONE action (REPOSE-style: precomputed per-term bounds
     make the pruning decision a metadata step, not a distributed plan).
-    The action returns the batch's query-term rows — (query_id, tok,
-    weights, ub) over query terms ⋈ stats ⋈ bounds, at most
-    |Q|·terms rows, the frame the ranking joins broadcast anyway — with
-    the corpus totals (n, tt) riding along as columns, so the scorer's
-    ``weights``/``ub`` expressions evaluate inside the same action.
-    Seed choice and the gate sums then run on the driver.
+    The priced frame holds the batch's query-term rows — (query_id,
+    tok, weights, ub) over query terms ⋈ stats ⋈ bounds, at most
+    |Q|·terms rows — with the corpus totals (n, tt) riding along as
+    columns, so the scorer's ``weights``/``ub`` expressions evaluate
+    inside the same action. The action persists that frame and brings
+    only (query_id, tok, volume, ub) to the driver, where the seed
+    choice and the gate sums run; the ranking plans read the weights
+    back from the cache, so no query-term row is re-parallelized from
+    the driver.
 
-    Returns (n, tt, v_all, qw, qub, seed_term): ``qw`` (query_id, tok,
-    weights) is a driver-local frame; ``qub`` (query_id, tok, vol, ub)
-    and ``seed_term`` (query_id, tok) are built only when the batch
-    passes the gate, else both are None (route exhaustive)."""
+    Returns (n, tt, v_all, qw, seed_term): ``qw`` (query_id, tok,
+    weights, ub) reads the cached frame; ``seed_term`` (query_id, tok)
+    is a driver-local frame built only when the batch passes the gate,
+    else None (route exhaustive)."""
     vol = scorer.vol
     n_c, tt_c = F.col("__n").cast("double"), F.col("__tt").cast("double")
-    # LEFT join: a query term missing from the bounds table (a partial
-    # bounds build) gets an infinite upper bound — always essential, so
-    # incomplete bounds degrade pruning, never correctness. (A PRESENT
-    # but stale max_tf that underestimates a newer wave's true max
-    # would break the bound — fold bounds with the same groupBy-max as
-    # the other statistics when appending.) The totals row is the
-    # preserved side, so it comes back even for a batch with no
-    # corpus term (one all-null term row).
+    # bounds rows fold with their max monoid first, so an appended
+    # wave's unfolded rows can neither duplicate a query term (and
+    # double-count its weight in the ranking joins) nor leave a stale
+    # max_tf below the true one. LEFT join: a query term missing from
+    # the bounds table (a partial bounds build) gets an infinite upper
+    # bound — always essential, so incomplete bounds degrade pruning,
+    # never correctness. The totals row is the preserved side, so it
+    # comes back even for a batch with no corpus term (one all-null
+    # term row).
+    folded = bounds.groupBy("tok").agg(F.max("max_tf").alias("max_tf"))
     priced = (
         _totals_agg(totals)
         .join(
-            qterms.join(stats, "tok").join(bounds, "tok", "left"), F.lit(True), "left"
+            qterms.join(stats, "tok").join(folded, "tok", "left"), F.lit(True), "left"
         )
         .select("__n", "__tt", "query_id", "tok", "max_tf", *scorer.weights(n_c, tt_c))
         .withColumn(
@@ -528,22 +531,13 @@ def _price_batch(scorer, qterms, stats, bounds, totals, k: int, seed_terms: int)
             F.when(F.col("max_tf").isNull(), F.lit(1 << 52)).otherwise(scorer.ub(tt_c)),
         )
         .drop("max_tf")
+        .persist()
     )
-    rows = priced.collect()
+    rows = priced.select("__n", "__tt", "query_id", "tok", vol, "ub").collect()
     n, tt = int(rows[0]["__n"]), int(rows[0]["__tt"])
     scorer.check(n, tt)
     terms = [r for r in rows if r["tok"] is not None]
-    spark, schema = qterms.sparkSession, priced.schema
-
-    def _local(rs, cols):
-        # the rows come from a frame of this very schema
-        return spark.createDataFrame(
-            [tuple(r[c] for c in cols) for r in rs],
-            StructType([schema[c] for c in cols]),
-            verifySchema=False,
-        )
-
-    qw = _local(terms, [c for c in priced.columns if c not in ("__n", "__tt", "ub")])
+    qw = priced.where(F.col("tok").isNotNull()).drop("__n", "__tt")
 
     # seed from the top-`seed_terms` upper-bound terms (ub descending,
     # ties by tok), not just one: on rare-tail vocabularies the single
@@ -597,9 +591,11 @@ def _price_batch(scorer, qterms, stats, bounds, totals, k: int, seed_terms: int)
         or v_seed * 3 > v_all
         or v_seed * (float(slice_rows) / float(n)) * 3.0 > float(v_all)
     ):
-        return n, tt, v_all, qw, None, None
-    qub = _local(terms, ["query_id", "tok", vol, "ub"])
-    return n, tt, v_all, qw, qub, _local(seeds, ["query_id", "tok"])
+        return n, tt, v_all, qw, None
+    seed_term = qterms.sparkSession.createDataFrame(
+        [(r["query_id"], r["tok"]) for r in seeds], qw.select("query_id", "tok").schema
+    )
+    return n, tt, v_all, qw, seed_term
 
 
 def _maxscore_topk(
@@ -663,7 +659,7 @@ def _maxscore_topk(
     qterms = scorer.query_terms(
         _query_tokens(queries, query_id_col, query_text_col), _b
     )
-    n, tt, v_all, qw, qub, seed_term = _price_batch(
+    n, tt, v_all, qw, seed_term = _price_batch(
         scorer, qterms, stats, bounds, totals, k, seed_terms
     )
     qw_b = _b(qw)
@@ -691,12 +687,6 @@ def _maxscore_topk(
 
     if seed_term is None:
         return _exhaustive()
-    # past gate #1 every later action (elig_vol, θ, gate #2) and the
-    # returned plan read the weights, so stage them once; the cached
-    # relation's exact size also keeps AQE's join choices static (the
-    # driver-local frame has no size estimate, and the θ action's job
-    # count varied from run to run without the cache)
-    qw.persist()
 
     # df-bounded by the seed cap and reused by the eligibility count,
     # the routing gate and the theta scoring — persist (§5)
@@ -764,6 +754,7 @@ def _maxscore_topk(
         .orderBy(F.col("ub").asc(), F.col("tok"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
+    qub = qw.select("query_id", "tok", vol, "ub")
     cum, floor = scorer.floor(qub.withColumn("cum", F.sum("ub").over(wcum)), post)
     ess = (
         cum.join(_b(theta), "query_id")

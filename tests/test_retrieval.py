@@ -726,6 +726,44 @@ class TestPrunedTopk:
         assert sorted(map(tuple, probe.collect())) == want and want
         assert "Union" in probe._jdf.queryExecution().executedPlan().toString()
 
+    @pytest.mark.parametrize("name", ["bm25_pruned", "lm_pruned"])
+    def test_unfolded_bounds_rows(self, spark, name):
+        """A ``bounds`` frame with several rows per term (appended
+        waves not folded yet, or the same table unioned twice) is
+        folded with its max monoid before pricing: a duplicated term
+        row must not double-count that term's weight in the ranking
+        joins, and a wave's smaller max_tf must not stand in for the
+        true one. The batch takes the candidate-verify path, so both
+        the verify and the theta-null slice read the weights."""
+        from swarm_spark.ops.retrieval import bm25_term_bounds
+
+        pruned, exhaustive, stats_kw = self._rankers(name)
+        docs = self._skewed(spark)
+        post = bm25_postings(docs)
+        qs = self._queries(
+            spark,
+            [
+                (0, "the topic3 mid1"),
+                (1, "the common mid1"),
+                (2, "topic11 the mid4 common"),
+                (4, "topic5"),
+            ],
+        )
+        waves = bm25_term_bounds(
+            bm25_postings(docs.where(F.col("doc_id") % 2 == 0))
+        ).unionByName(
+            bm25_term_bounds(bm25_postings(docs.where(F.col("doc_id") % 2 == 1)))
+        )
+        assert waves.count() > waves.select("tok").distinct().count()
+        want = sorted(map(tuple, exhaustive(docs, qs, k=4).collect()))
+        for bounds in (bm25_term_bounds(post).unionByName(bm25_term_bounds(post)), waves):
+            probe = pruned(
+                None, qs, k=4, postings=post, totals=bm25_totals(docs), bounds=bounds,
+                **stats_kw(bm25_stats(post)),
+            )
+            assert sorted(map(tuple, probe.collect())) == want and want
+            assert "Union" in probe._jdf.queryExecution().executedPlan().toString()
+
     def test_bounds_are_max_monoid(self, spark, corpus):
         from swarm_spark.ops.retrieval import bm25_term_bounds
 
