@@ -54,7 +54,7 @@ statistic, upper bound) with the corpus totals riding along; the
 seed choice runs on the driver, so ``seed_term`` is a driver-local
 frame, like θ. The ladder persist()s only what a later action or
 the returned plan re-reads: the ad-hoc entry's batch-restricted
-postings, the priced query-term rows (``qw`` and, past gate #1,
+postings, the batch's query-term rows (``qw`` and, past gate #1,
 ``qub`` read them back), and, past gate #1, ``seed_pairs`` and
 ``ess`` (essential terms). They are NOT unpersisted on exit (a lazy
 frame is returned; the terminal action happens at the caller). Batch
@@ -492,52 +492,59 @@ def _price_batch(scorer, qterms, stats, bounds, totals, k: int, seed_terms: int)
     """Gate #1 of :func:`_maxscore_topk`, priced from the stored
     statistics in ONE action (REPOSE-style: precomputed per-term bounds
     make the pruning decision a metadata step, not a distributed plan).
-    The priced frame holds the batch's query-term rows — (query_id,
-    tok, weights, ub) over query terms ⋈ stats ⋈ bounds, at most
-    |Q|·terms rows — with the corpus totals (n, tt) riding along as
-    columns, so the scorer's ``weights``/``ub`` expressions evaluate
-    inside the same action. The action persists that frame and brings
-    only (query_id, tok, volume, ub) to the driver, where the seed
-    choice and the gate sums run; the ranking plans read the weights
-    back from the cache, so no query-term row is re-parallelized from
-    the driver.
+    The action reads the batch's query-term rows — query terms ⋈
+    stats ⋈ bounds, at most |Q|·terms rows — with the corpus totals
+    (n, tt) riding along as columns, so the scorer's ``weights``/``ub``
+    expressions evaluate inside it. It persists the term rows and
+    brings only (query_id, tok, volume, ub) to the driver, where the
+    seed choice and the gate sums run; the ranking plans read the term
+    rows back from the cache, so no query-term row is re-parallelized
+    from the driver.
 
     Returns (n, tt, v_all, qw, seed_term): ``qw`` (query_id, tok,
-    weights, ub) reads the cached frame; ``seed_term`` (query_id, tok)
-    is a driver-local frame built only when the batch passes the gate,
-    else None (route exhaustive)."""
+    weights, ub) reads the cached term rows, with the same
+    ``weights``/``ub`` expressions over literal totals; ``seed_term``
+    (query_id, tok) is a driver-local frame built only when the batch
+    passes the gate, else None (route exhaustive)."""
     vol = scorer.vol
-    n_c, tt_c = F.col("__n").cast("double"), F.col("__tt").cast("double")
     # bounds rows fold with their max monoid first, so an appended
     # wave's unfolded rows can neither duplicate a query term (and
     # double-count its weight in the ranking joins) nor leave a stale
     # max_tf below the true one. LEFT join: a query term missing from
     # the bounds table (a partial bounds build) gets an infinite upper
     # bound — always essential, so incomplete bounds degrade pruning,
-    # never correctness. The totals row is the preserved side, so it
-    # comes back even for a batch with no corpus term (one all-null
-    # term row).
+    # never correctness.
     folded = bounds.groupBy("tok").agg(F.max("max_tf").alias("max_tf"))
-    priced = (
-        _totals_agg(totals)
-        .join(
-            qterms.join(stats, "tok").join(folded, "tok", "left"), F.lit(True), "left"
+    terms_df = qterms.join(stats, "tok").join(folded, "tok", "left").persist()
+
+    def _weigh(frame, n: Column, tt: Column, *keep: str) -> DataFrame:
+        return (
+            frame.select(*keep, "query_id", "tok", "max_tf", *scorer.weights(n, tt))
+            .withColumn(
+                "ub",
+                # 2^52: unreachable by any real theta (scores are ~2^31)
+                # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
+                F.when(F.col("max_tf").isNull(), F.lit(1 << 52)).otherwise(scorer.ub(tt)),
+            )
+            .drop("max_tf")
         )
-        .select("__n", "__tt", "query_id", "tok", "max_tf", *scorer.weights(n_c, tt_c))
-        .withColumn(
-            "ub",
-            # 2^52: unreachable by any real theta (scores are ~2^31)
-            # yet safe in the cumulative sum (10^3 terms x 2^52 < 2^63)
-            F.when(F.col("max_tf").isNull(), F.lit(1 << 52)).otherwise(scorer.ub(tt_c)),
+
+    # the totals row is the preserved side, so it comes back even for a
+    # batch with no corpus term (one all-null term row); the nested-loop
+    # join stays in this action, and the ranking plans read the cached
+    # term rows with the totals as literals
+    rows = (
+        _weigh(
+            _totals_agg(totals).join(terms_df, F.lit(True), "left"),
+            F.col("__n").cast("double"), F.col("__tt").cast("double"), "__n", "__tt",
         )
-        .drop("max_tf")
-        .persist()
+        .select("__n", "__tt", "query_id", "tok", vol, "ub")
+        .collect()
     )
-    rows = priced.select("__n", "__tt", "query_id", "tok", vol, "ub").collect()
     n, tt = int(rows[0]["__n"]), int(rows[0]["__tt"])
     scorer.check(n, tt)
     terms = [r for r in rows if r["tok"] is not None]
-    qw = priced.where(F.col("tok").isNotNull()).drop("__n", "__tt")
+    qw = _weigh(terms_df, _lit(n), _lit(tt))
 
     # seed from the top-`seed_terms` upper-bound terms (ub descending,
     # ties by tok), not just one: on rare-tail vocabularies the single
